@@ -4187,58 +4187,6 @@ def q_stream_keep_latest_packed(spark: SparkSession, sf: str) -> DataFrame:
     return out.select("user_id", "ts_us", "event_id", "event_type")
 
 
-def _register_tws_contract() -> None:
-    """stream_keep_latest_tws is registered ONLY where the runtime can
-    execute it (google.protobuf present — the TWS Python runner's state
-    protocol): the registry reflects the environment instead of shipping a
-    contract guaranteed to error.  The same keep-latest semantics stay
-    always-contracted via stream_keep_latest (applyInPandasWithState) and
-    stream_upsert_sink (foreachBatch); environments with protobuf
-    additionally gate the Spark-4 successor API against the same oracle."""
-    from shuttle_spark.streaming.core import tws_available
-
-    if not tws_available():
-        return
-
-    @contract(
-        "stream_keep_latest_tws",
-        "SELECT user_id, epoch_us(ts::TIMESTAMP) AS ts_us, event_id,"
-        " event_type"
-        " FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id"
-        "   ORDER BY ts::TIMESTAMP DESC, event_id DESC) AS rn FROM events)"
-        " WHERE rn = 1",
-        "B8",
-    )
-    def q_stream_keep_latest_tws(spark: SparkSession, sf: str) -> DataFrame:
-        """Keep-latest on transformWithStateInPandas (Spark 4 successor
-        stateful API): the update log's last emission per key reduced to
-        the final winner must hash-match the batch keep-latest oracle over
-        ALL events (update mode emits every key, so no watermark
-        restriction)."""
-        from shuttle_spark.streaming.core import (
-            events_stream_multi,
-            run_available_now,
-            stream_keep_latest_tws,
-        )
-
-        out = run_available_now(
-            stream_keep_latest_tws(events_stream_multi(spark, sf, n_files=4)),
-            output_mode="update",
-            shuffle_partitions=4,
-            session_conf={
-                "spark.sql.streaming.stateStore.providerClass":
-                    "org.apache.spark.sql.execution.streaming.state."
-                    "RocksDBStateStoreProvider"
-            },
-        )
-        return D.keep_latest(
-            out, ["user_id"], [F.col("ts_us").desc(), F.col("event_id").desc()]
-        ).select("user_id", "ts_us", "event_id", "event_type")
-
-
-_register_tws_contract()
-
-
 @contract(
     "stream_sessionize",
     "WITH marked AS (SELECT user_id, ts::TIMESTAMP AS ts,"

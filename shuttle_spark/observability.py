@@ -19,7 +19,7 @@ here:
   returns only the stages that action created — per-contract shuffle-byte
   accounting with no extra listener plumbing on the Python side.
 
-`tools/observe_contracts.py` uses `measure` to publish a per-contract
+`tools/plan_report.py` uses `measure` to publish a per-contract
 shuffle/spill table into PLANS.md.
 """
 

@@ -5,8 +5,10 @@ worker file is `_final` before reading (/root/reference/src/main/java/com/oppo/
 shuttle/rss/clients/ShufflePartitionReader.java:134-153) — is the moral
 ancestor of the watermark: both declare "this slice of input is complete, you
 may emit".  Our engine exposes the Spark-native version: file-source streams,
-event-time watermarks, tumbling/session windows, stream dedup, and a custom
-stateful keep-latest built on ``applyInPandasWithState``.
+event-time watermarks, tumbling/session windows, stream dedup, and four
+custom stateful families (keep-latest, EWMA, LOCF, CUSUM), each per-key and
+packed, all run by one ``applyInPandasWithState`` runner (``_watermark_fold``)
+in append mode.
 
 Correctness protocol (tested in tests/test_streaming.py): every streaming
 operator replayed to completion over a static directory must equal its batch
@@ -34,11 +36,11 @@ import shutil
 import tempfile
 import time
 import uuid
-from collections.abc import Iterable, Sequence
+from collections.abc import Callable, Iterable, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -264,6 +266,238 @@ def stream_dedup(
     )
 
 
+# ---------------------------------------------------------------------------
+# Stateful stream families (keep-latest, EWMA, LOCF, CUSUM): one
+# applyInPandasWithState runner, per-key or packed, and one vectorized step
+# per family.
+# ---------------------------------------------------------------------------
+
+_DTYPES = {"long": "int64", "string": object}
+_ROW = ("p_k", "p_ts", "p_eid", "p_c")  # pending row: key, ts_us, tiebreak, cents
+_NULL_CENTS = -(2**62)  # a NULL value inside the long-array state
+
+
+def _row_state(key_type: str) -> dict[str, str]:
+    return {"p_k": key_type, "p_ts": "long", "p_eid": "long", "p_c": "long"}
+
+
+def _watermark_fold(
+    events: DataFrame,
+    group: str | Column,
+    ts_col: str,
+    watermark: str,
+    out_ddl: str,
+    state: dict[str, str],
+    step: Callable,
+) -> DataFrame:
+    """Run one stateful stream family to append-mode output.
+
+    ``group`` is the key column (one state entry per key) or a ``pmod``
+    bucket Column of it (PACKED state: many keys share an entry, so the
+    measured ~1.3 ms applyInPandasWithState per-GROUP-invocation
+    constant is paid per bucket per batch instead of per key — at a
+    10M-key stream that constant is the per-key form's whole budget).
+    Both forms run the same step, so they emit the same rows; the
+    packed-vs-per-key parity tests pin it.
+
+    ``state`` maps each state field to its element type (``long`` or
+    ``string``).  Every field is a flat array, carried per-key values
+    and pending rows alike; ``p_ts`` holds the pending rows' event
+    times in epoch micros.  ``step(pending, incoming, wm_ms) -> (emit,
+    pending)`` gets the loaded arrays, the group's rows of this
+    micro-batch as one pandas frame (None on a timeout call) and the
+    current watermark; it returns the rows to emit (a frame or None)
+    and the arrays to carry.
+
+    The runner owns the rest: it loads the state and saves it through
+    ``ndarray.tolist()``, re-arms the event-time timeout at the earliest
+    pending row (so a bucket fires in the micro-batch a per-key entry
+    would), and removes the state once every array is empty.  The
+    watermark bounds pending state the way the reference's stage TTL
+    bounds its seen-sets (ShuffleDataExecutor.java:279-313)."""
+    dtypes = {name: _DTYPES[t] for name, t in state.items()}
+
+    def fold(_key, pdf_iter: Iterable[pd.DataFrame], gs: GroupState):
+        wm_ms = gs.getCurrentWatermarkMs()
+        saved = gs.get if gs.exists else [[]] * len(dtypes)
+        pending = {
+            n: np.asarray(v, dtype=dt) for (n, dt), v in zip(dtypes.items(), saved)
+        }
+        batch = [] if gs.hasTimedOut else [p for p in pdf_iter if len(p)]
+        incoming = (
+            None if not batch
+            else batch[0] if len(batch) == 1
+            else pd.concat(batch, ignore_index=True)
+        )
+        emit, pending = step(pending, incoming, wm_ms)
+        if any(len(a) for a in pending.values()):
+            gs.update(tuple(pending[n].tolist() for n in dtypes))
+            if len(pending["p_ts"]):
+                gs.setTimeoutTimestamp(
+                    max(int(pending["p_ts"].min()) // 1000 + 1, wm_ms + 1)
+                )
+        elif gs.exists:
+            gs.remove()
+        if emit is not None:
+            yield emit
+
+    if not isinstance(group, str):
+        events = events.withColumn("__bucket", group)
+        group = "__bucket"
+    return (
+        events.withWatermark(ts_col, watermark)
+        .groupBy(group)
+        .applyInPandasWithState(
+            fold,
+            out_ddl,
+            ", ".join(f"{n} array<{t}>" for n, t in state.items()),
+            "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+
+
+def _bucket(key_col: str, n_state_buckets: int) -> Column:
+    return F.pmod(F.col(key_col), F.lit(n_state_buckets))
+
+
+def _event_us(ts: pd.Series) -> np.ndarray:
+    return ts.values.astype("datetime64[us]").astype("int64")
+
+
+def _append(pending: dict, rows: dict) -> dict:
+    return {
+        n: np.concatenate([a, rows[n]]) if n in rows else a
+        for n, a in pending.items()
+    }
+
+
+def _frame(cols: dict, mask: np.ndarray) -> pd.DataFrame | None:
+    """The masked rows of ``cols`` as a frame, None when there are none."""
+    if not mask.any():
+        return None
+    return pd.DataFrame({n: a[mask] for n, a in cols.items()})
+
+
+def _runs(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per row: start and end index of its run of equal adjacent keys."""
+    head = np.ones(len(keys), dtype=bool)
+    head[1:] = keys[1:] != keys[:-1]
+    starts = np.flatnonzero(head)
+    run = np.cumsum(head) - 1
+    return starts[run], np.append(starts[1:], len(keys))[run]
+
+
+def _cents_rows(
+    pdf: pd.DataFrame,
+    key_col: str,
+    key_type: str,
+    ts_col: str,
+    tb_col: str,
+    value_col: str,
+    wm_ms: int,
+    scale: int = 2,
+    keep_null: bool = False,
+) -> dict:
+    """One micro-batch as pending rows.  Rows strictly before the
+    watermark drop, the rule Spark's built-in stateful operators apply:
+    their predecessors are already final, so scoring them would replay
+    history out of order.  Rows AT the watermark stay, because
+    ``_finalize`` takes ts <= watermark (ADVICE r6).  Values become
+    integer cents, ``floor(value * 10**scale + 0.5)`` on the same float64
+    inputs as the batch twins; NULLs become ``_NULL_CENTS`` when
+    ``keep_null``, else drop."""
+    us = _event_us(pdf[ts_col])
+    keys = pdf[key_col]
+    keys = (
+        keys.to_numpy("int64") if key_type == "long"
+        else keys.astype(str).to_numpy(object)
+    )
+    vals = pdf[value_col].values.astype("float64")
+    nan = np.isnan(vals)
+    live = us >= wm_ms * 1000
+    if not keep_null:
+        live &= ~nan
+    cents = np.floor(np.where(nan, 0.0, vals) * 10**scale + 0.5).astype("int64")
+    cents[nan] = _NULL_CENTS
+    return {
+        "p_k": keys[live],
+        "p_ts": us[live],
+        "p_eid": pdf[tb_col].to_numpy("int64")[live],
+        "p_c": cents[live],
+    }
+
+
+def _finalize(pending: dict, wm_ms: int) -> tuple[dict, dict]:
+    """Split pending rows at the watermark.  Rows with ts <= watermark
+    are final: every predecessor has a smaller or equal event time, so it
+    is final with or before them.  They come out in (key, ts, tiebreak)
+    order, which keeps each key's rows contiguous and in event-time
+    order; the rest stay pending."""
+    fin = pending["p_ts"] <= wm_ms * 1000
+    rows = {n: pending[n][fin] for n in _ROW}
+    order = np.lexsort((rows["p_eid"], rows["p_ts"], rows["p_k"]))
+    rest = {n: a[~fin] if n in _ROW else a for n, a in pending.items()}
+    return {n: a[order] for n, a in rows.items()}, rest
+
+
+def _after_history(hist: dict, fin: dict) -> tuple[dict, np.ndarray, np.ndarray]:
+    """Each key's carried ``hist`` rows (oldest first) followed by its
+    finalized rows, key-contiguous; ``new`` marks the finalized rows and
+    a column one side lacks is zero on that side.  Returns the rows and
+    each row's run start and end."""
+    n_h, n_f = len(hist["p_k"]), len(fin["p_k"])
+    rows = {
+        n: np.concatenate(
+            [hist.get(n, np.zeros(n_h, "int64")), fin.get(n, np.zeros(n_f, "int64"))]
+        )
+        for n in {**hist, **fin}
+    }
+    rows["new"] = np.arange(n_h + n_f) >= n_h
+    order = np.argsort(rows["p_k"], kind="stable")
+    rows = {n: a[order] for n, a in rows.items()}
+    return (rows, *_runs(rows["p_k"]))
+
+
+def _keep_latest(
+    events: DataFrame, group: str | Column, key_col: str, ts_col: str, watermark: str
+) -> DataFrame:
+    def step(pending, incoming, wm_ms):
+        if incoming is not None:
+            pending = _append(
+                pending,
+                {
+                    "p_k": incoming[key_col].to_numpy("int64"),
+                    "p_ts": _event_us(incoming[ts_col]),
+                    "p_eid": incoming["event_id"].to_numpy("int64"),
+                    "p_type": incoming["event_type"].to_numpy(object),
+                },
+            )
+        # each key's winner is its last row in (key, ts, event_id) order
+        order = np.lexsort((pending["p_eid"], pending["p_ts"], pending["p_k"]))
+        _, end = _runs(pending["p_k"][order])
+        win = order[np.arange(len(order)) == end - 1]
+        pending = {n: a[win] for n, a in pending.items()}
+        emit = pending["p_ts"] // 1000 < wm_ms
+        out = {
+            key_col: pending["p_k"],
+            "ts_us": pending["p_ts"],
+            "event_id": pending["p_eid"],
+            "event_type": pending["p_type"],
+        }
+        return _frame(out, emit), {n: a[~emit] for n, a in pending.items()}
+
+    return _watermark_fold(
+        events,
+        group,
+        ts_col,
+        watermark,
+        f"`{key_col}` long, ts_us long, event_id long, event_type string",
+        {"p_k": "long", "p_ts": "long", "p_eid": "long", "p_type": "string"},
+        step,
+    )
+
+
 def stream_keep_latest(
     events: DataFrame,
     key_col: str = "user_id",
@@ -273,78 +507,16 @@ def stream_keep_latest(
     watermark closes the key's quiet period (B8's streaming twin — the
     stale-attempt filter of PartitionPipeReader.java:150-170 as a live op).
 
-    Built on ``applyInPandasWithState``: state = the current winner per key;
-    each micro-batch folds its rows in; on event-time timeout the winner is
-    emitted and state freed.  The payload is the events-table shape
-    (event_id tiebreak + event_type), FIXED: a payload_cols parameter
-    previously accepted here was silently ignored — for arbitrary payload
-    columns use the batch twin ``dedup.keep_latest`` or the foreachBatch
-    sink ``run_upsert_sink``, which honor them.  Output schema: key,
-    ts_us (epoch micros), event_id, event_type.
+    State per key = its current winner under the total (ts, event_id)
+    order, deterministic like the reference's attemptId tiebreak.  Every
+    row is ingested, late ones included; the winner is emitted, and its
+    state freed, once ``ts_us // 1000 < watermark_ms``.  The payload is
+    the events-table shape (event_id tiebreak + event_type), FIXED: for
+    arbitrary payload columns use the batch twin ``dedup.keep_latest`` or
+    the foreachBatch sink ``run_upsert_sink``, which honor them.  Output
+    schema: key, ts_us (epoch micros), event_id, event_type.
     """
-    out_fields = [
-        T.StructField(key_col, T.LongType()),
-        T.StructField("ts_us", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-    ]
-    state_schema = T.StructType(
-        [
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            ts_us, event_id, event_type = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "ts_us": [ts_us],
-                    "event_id": [event_id],
-                    "event_type": [event_type],
-                }
-            )
-            return
-        best = state.get if state.exists else None
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            # total order (ts, event_id) — deterministic like the
-            # reference's attemptId tiebreak.  Pure-numpy argmax: this
-            # closure runs once per KEY per batch (tens of thousands of
-            # calls), so pandas sort_values/assign copies here were the
-            # dominant stream cost.
-            us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-            eid = pdf["event_id"].values.astype("int64")
-            i = int(np.lexsort((eid, us))[-1])
-            cand = (int(us[i]), int(eid[i]), str(pdf["event_type"].values[i]))
-            if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-                best = cand
-        if best is not None:
-            state.update(best)
-            # emit once the watermark passes the key's last-seen event time
-            # (timeout must stay ahead of the current watermark)
-            state.setTimeoutTimestamp(
-                max(best[0] // 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        return
-        yield  # pragma: no cover — marks this function as a generator
-
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fold,
-            T.StructType(out_fields),
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return _keep_latest(events, key_col, key_col, ts_col, "2 hours")
 
 
 def stream_keep_latest_packed(
@@ -354,243 +526,12 @@ def stream_keep_latest_packed(
     watermark: str = "2 hours",
     n_state_buckets: int = 32,
 ) -> DataFrame:
-    """``stream_keep_latest`` with PACKED state (VERDICT r10 item 6) —
-    the second family to ship the ``stream_locf_packed`` transform, the
-    100 TB state-scaling answer to applyInPandasWithState's measured
-    ~1.3 ms per GROUP INVOCATION constant: per-key state pays
-    keys x batches x 1.3 ms (the whole budget at a 10M-key stream),
-    packed state pays it once per BUCKET per batch and runs the per-key
-    argmax vectorized over the bucket's rows.
-
-    Bucketing is ``pmod(key, n_state_buckets)`` like the locf twin;
-    state per bucket = the pending winners as flat parallel arrays
-    (key, ts_us, event_id, event_type) — O(quiescing keys/bucket), and
-    a key's entry is freed the moment its row is emitted.
-
-    Emission protocol is OBSERVATIONALLY IDENTICAL to the per-key
-    operator (asserted by the packed-vs-per-key parity test and by
-    sharing the batch keep-latest oracle verbatim): a key's winner — the
-    max row under the total (ts, event_id) order — is emitted once the
-    watermark passes its event time (``ts_ms < watermark_ms``, exactly
-    the per-key ``setTimeoutTimestamp(best_ts_ms + 1)`` firing rule),
-    and the bucket re-arms its timeout at the EARLIEST pending winner's
-    emission time, so every key emits in the same micro-batch the
-    per-key form would have emitted it."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("k_ids", T.ArrayType(T.LongType())),
-            T.StructField("k_ts", T.ArrayType(T.LongType())),
-            T.StructField("k_eid", T.ArrayType(T.LongType())),
-            T.StructField("k_type", T.ArrayType(T.StringType())),
-        ]
-    )
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            k_ids = np.asarray(state.get[0], dtype="int64")
-            k_ts = np.asarray(state.get[1], dtype="int64")
-            k_eid = np.asarray(state.get[2], dtype="int64")
-            k_type = np.asarray(list(state.get[3]), dtype=object)
-        else:
-            k_ids = k_ts = k_eid = np.empty(0, dtype="int64")
-            k_type = np.empty(0, dtype=object)
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype(
-                    "int64"
-                )
-                k_ids = np.concatenate(
-                    [k_ids, pdf[key_col].values.astype("int64")]
-                )
-                k_ts = np.concatenate([k_ts, us])
-                k_eid = np.concatenate(
-                    [k_eid, pdf["event_id"].values.astype("int64")]
-                )
-                k_type = np.concatenate(
-                    [k_type, pdf["event_type"].values.astype(object)]
-                )
-        if len(k_ids):
-            # per-key winner under the total (ts, event_id) order: sort
-            # by (key, ts, eid) and keep each key's LAST row — one
-            # vectorized pass for the whole bucket instead of a group
-            # invocation per key
-            order = np.lexsort((k_eid, k_ts, k_ids))
-            sorted_keys = k_ids[order]
-            last = np.empty(len(sorted_keys), dtype=bool)
-            last[:-1] = sorted_keys[1:] != sorted_keys[:-1]
-            last[-1] = True
-            sel = order[last]
-            k_ids, k_ts, k_eid, k_type = (
-                k_ids[sel], k_ts[sel], k_eid[sel], k_type[sel],
-            )
-            emit = (k_ts // 1000) < wm_ms
-            out = None
-            if emit.any():
-                out = pd.DataFrame(
-                    {
-                        key_col: k_ids[emit],
-                        "ts_us": k_ts[emit],
-                        "event_id": k_eid[emit],
-                        "event_type": k_type[emit],
-                    }
-                )
-                keep = ~emit
-                k_ids, k_ts, k_eid, k_type = (
-                    k_ids[keep], k_ts[keep], k_eid[keep], k_type[keep],
-                )
-            if len(k_ids):
-                state.update(
-                    (
-                        [int(x) for x in k_ids],
-                        [int(x) for x in k_ts],
-                        [int(x) for x in k_eid],
-                        [str(x) for x in k_type],
-                    )
-                )
-                state.setTimeoutTimestamp(
-                    max(int(k_ts.min()) // 1000 + 1, wm_ms + 1)
-                )
-            elif state.exists:
-                state.remove()
-            if out is not None and len(out):
-                yield out
-        elif state.exists:
-            state.remove()
-
-    bucketed = events.withColumn(
-        "__bucket", F.pmod(F.col(key_col), F.lit(n_state_buckets))
-    )
-    return (
-        bucketed.withWatermark(ts_col, watermark)
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def tws_available() -> bool:
-    """Whether Spark's transformWithStateInPandas runner can execute here:
-    its state-server protocol needs ``google.protobuf`` at runtime."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stream_keep_latest_tws(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Keep-latest on Spark 4's ``transformWithStateInPandas`` — the
-    successor API to ``applyInPandasWithState`` (typed ValueState handles,
-    RocksDB-backed).  Each micro-batch emits the key's current winner
-    (update mode); the winner sequence per key is monotone in
-    (ts_us, event_id), so the LAST update per key is the stream's final
-    answer — the contract reduces the update log with the batch
-    keep-latest and matches the all-events oracle.
-
-    Same semantics as stream_keep_latest (the reference's stale-attempt
-    filter, PartitionPipeReader.java:150-170); kept separate so both
-    stateful APIs stay covered.  On this machine google.protobuf is
-    absent and unobtainable, so this path raises the gated ImportError —
-    closed as a documented environment constraint (ENVIRONMENT.md §1);
-    stream_keep_latest is the shipped engine path.
-
-    ENVIRONMENT NOTE: the transformWithState Python runner requires the
-    ``google.protobuf`` package (its state-server protocol) and the
-    RocksDB state store provider; without protobuf the runner would crash
-    mid-query with an opaque executor error, so this operator probes the
-    import up front and fails fast with a clear message.  The parity test
-    (tests/test_streaming.py) asserts BOTH branches — protobuf present =>
-    batch equality, absent => this exact fail-fast — so the suite carries
-    no environment skip; the contract (stream_keep_latest_tws) is
-    registered only where the runtime can execute it, and the
-    applyInPandasWithState path (stream_keep_latest) plus the foreachBatch
-    sink (run_upsert_sink) carry the always-on oracle gates.
-    """
-    if not tws_available():
-        raise ImportError(
-            "transformWithStateInPandas requires the google.protobuf package"
-            " (the state-server protocol of Spark's Python TWS runner),"
-            " which is not installed in this environment; use"
-            " stream_keep_latest (applyInPandasWithState) or run_upsert_sink"
-            " (foreachBatch) for the same keep-latest semantics."
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-
-    class KeepLatest(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._winner = handle.getValueState("winner", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            best = tuple(self._winner.get()) if self._winner.exists() else None
-            for pdf in rows:
-                for ts_us, event_id, event_type in zip(
-                    pdf["ts_us"], pdf["event_id"], pdf["event_type"]
-                ):
-                    cand = (int(ts_us), int(event_id), str(event_type))
-                    if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-                        best = cand
-            self._winner.update(best)
-            yield pd.DataFrame(
-                [(key[0], *best)],
-                columns=[key_col, "ts_us", "event_id", "event_type"],
-            )
-
-        def close(self) -> None:
-            pass
-
-    # fixed events-table payload, matching the state/output schemas above
-    # (see stream_keep_latest's docstring for the generic-payload routes)
-    prepared = events.select(
-        F.col(key_col),
-        F.unix_micros(F.col(ts_col)).alias("ts_us"),
-        F.col("event_id"),
-        F.col("event_type"),
-    )
-    return prepared.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=KeepLatest(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
+    """``stream_keep_latest`` with PACKED state (VERDICT r10 item 6):
+    keys share ``pmod(key, n_state_buckets)`` state groups and each
+    bucket's per-key argmax runs vectorized (see ``_watermark_fold``).
+    Emits the same rows as the per-key operator."""
+    return _keep_latest(
+        events, _bucket(key_col, n_state_buckets), key_col, ts_col, watermark
     )
 
 
@@ -723,31 +664,33 @@ def _scoped_conf(spark: SparkSession, overrides: dict[str, str]):
     return restore
 
 
-def _run_foreach_batch(
-    stream_df: DataFrame,
-    fn,
+def _run_to_completion(
+    writer,
+    spark: SparkSession,
     query_name: str,
     shuffle_partitions: int | None,
 ) -> None:
-    """Run a foreachBatch query to completion (AvailableNow) with a
-    scoped shuffle-partition override."""
-    spark = stream_df.sparkSession
-    ckpt = tracked_mkdtemp(f"ckpt_{query_name}_")
+    """Run a configured DataStreamWriter to completion (AvailableNow)
+    with a scoped shuffle-partition override.  The checkpoint only
+    serves this one run, so it is deleted once the query terminates:
+    the result lives in the sink, and a long-lived session must not
+    accumulate one checkpoint per replay."""
+    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{query_name}_", dir=_scratch_root())
     overrides = {}
     if shuffle_partitions is not None:
         overrides["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     restore = _scoped_conf(spark, overrides)
     try:
-        q = (
-            stream_df.writeStream.foreachBatch(fn)
-            .queryName(query_name)
+        (
+            writer.queryName(query_name)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
     finally:
         restore()
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def run_upsert_sink(
@@ -839,7 +782,9 @@ def run_upsert_sink(
             fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/v{v}"), True)
 
     name = query_name or f"upsert_{uuid.uuid4().hex[:8]}"
-    _run_foreach_batch(events, merge, name, shuffle_partitions)
+    _run_to_completion(
+        events.writeStream.foreachBatch(merge), spark, name, shuffle_partitions
+    )
     # Read THIS run's final version (not the directory max: a previous
     # differently-batched run may have left a stale higher version that
     # this run's GC retained as its own batch ids never reached it).
@@ -916,7 +861,12 @@ def run_stream_decontaminate(
         clean.write.mode("overwrite").parquet(f"{out_path}/b{batch_id}")
 
     name = query_name or f"decon_{uuid.uuid4().hex[:8]}"
-    _run_foreach_batch(docs_stream, clean_batch, name, shuffle_partitions)
+    _run_to_completion(
+        docs_stream.writeStream.foreachBatch(clean_batch),
+        spark,
+        name,
+        shuffle_partitions,
+    )
     dirs = sorted(
         d
         for d in _glob.glob(f"{out_path}/b*")
@@ -950,8 +900,10 @@ def replay_partitions(spark: SparkSession, lo: int = 4, hi: int = 16) -> int:
     state is key-local); only scheduling changes."""
     master = spark.sparkContext.master or ""
     if master.startswith("local[") and master.endswith("]"):
-        inner = master[6:-1]
-        cores = os.cpu_count() or lo if inner == "*" else int(inner)
+        # local[N], local[*] and local[N,F] / local[*,F] (F = max task
+        # failures): only the core count matters
+        inner = master[6:-1].split(",", 1)[0]
+        cores = (os.cpu_count() or lo) if inner == "*" else int(inner)
     else:
         cores = spark.sparkContext.defaultParallelism
     return max(lo, min(hi, cores))
@@ -961,16 +913,13 @@ def run_available_now(
     stream_df: DataFrame,
     query_name: str | None = None,
     shuffle_partitions: int | None = None,
-    output_mode: str = "append",
-    session_conf: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Replay a stream to completion (Trigger.AvailableNow) into a memory
-    sink and return the result as a batch DataFrame — the harness that lets
-    tests assert stream == batch.  Complete/append mode is chosen by Spark
-    from the plan; we use append for watermarked aggs (final results only)
-    and update for transformWithState operators.  ``session_conf`` entries
-    are set for the query and restored afterwards (e.g. the RocksDB state
-    store provider transformWithState requires).
+    """Replay a stream to completion (Trigger.AvailableNow) into an
+    append-mode memory sink and return the result as a batch DataFrame —
+    the harness that lets tests assert stream == batch.  Every operator
+    replayed here emits final rows only (watermarked aggregates and the
+    stateful families), so append is the one output mode.  The query's
+    checkpoint is deleted once it terminates.
 
     ``shuffle_partitions`` sizes the stateful-operator partition count for
     THIS query only (pinned into its checkpoint at first start; the session
@@ -981,25 +930,74 @@ def run_available_now(
     (Ors2ShuffleManager.scala:372-398).
     """
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
-    ckpt = tracked_mkdtemp(f"ckpt_{name}_")
     spark = stream_df.sparkSession
-    overrides = dict(session_conf or {})
-    if shuffle_partitions is not None:
-        overrides["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    restore = _scoped_conf(spark, overrides)
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        restore()
+    writer = stream_df.writeStream.format("memory").outputMode("append")
+    _run_to_completion(writer, spark, name, shuffle_partitions)
     return spark.table(name)
+
+
+def _ewma(
+    events: DataFrame,
+    group: str | Column,
+    key_col: str,
+    ts_col: str,
+    value_col: str,
+    threshold_cents: int,
+    window: int,
+    min_lags: int,
+    watermark: str,
+) -> DataFrame:
+    weights = 1 << np.arange(window - 1, -1, -1, dtype="int64")
+    cum_denom = np.append(0, np.cumsum(weights))
+    thr = int(threshold_cents)
+
+    def step(pending, incoming, wm_ms):
+        if incoming is not None:
+            pending = _append(
+                pending,
+                _cents_rows(
+                    incoming, key_col, "long", ts_col, "event_id", value_col, wm_ms
+                ),
+            )
+        fin, pending = _finalize(pending, wm_ms)
+        hist = {"p_k": pending["h_k"], "p_c": pending["h_c"]}
+        rows, start, end = _after_history(hist, fin)
+        x = rows["p_c"]
+        i = np.arange(len(x))
+        # lag-j term of the FIR, for every row with at least j predecessors
+        n_lags = np.minimum(i - start, window)
+        wsum = np.zeros(len(x), dtype="int64")
+        for j in range(1, window + 1):
+            lagged = np.flatnonzero(n_lags >= j)
+            wsum[lagged] += x[lagged - j] * weights[j - 1]
+        denom = cum_denom[n_lags]
+        hit = (
+            rows["new"]
+            & (n_lags >= min_lags)
+            & (np.abs(x * denom - wsum) > thr * denom)
+        )
+        keep = end - i <= window
+        pending.update(h_k=rows["p_k"][keep], h_c=x[keep])
+        out = {
+            key_col: rows["p_k"],
+            "event_id": rows["p_eid"],
+            "ts_us": rows["p_ts"],
+            "cents": x,
+            "wsum": wsum,
+            "denom": denom,
+        }
+        return _frame(out, hit), pending
+
+    return _watermark_fold(
+        events,
+        group,
+        ts_col,
+        watermark,
+        f"`{key_col}` long, event_id long, ts_us long, cents long, wsum long,"
+        " denom long",
+        {"h_k": "long", "h_c": "long", **_row_state("long")},
+        step,
+    )
 
 
 def stream_ewma_deviants(
@@ -1024,120 +1022,15 @@ def stream_ewma_deviants(
     history is exactly the batch operator's lag window: stream == batch on
     the watermark-finalized subset, bit-for-bit (the arithmetic is the
     same all-integer FIR — cents, dyadic weights, integer
-    cross-multiplied threshold).
+    cross-multiplied threshold).  NULL values carry no evidence and drop.
 
-    State per key = (last ``window`` finalized cents, pending rows); the
-    watermark bounds pending state exactly like the reference's stage TTL
-    bounds its seen-sets (ShuffleDataExecutor.java:279-313).  At scale the
-    state is O(window + in-flight disorder) per key and spills to RocksDB.
+    State per key = (last ``window`` finalized cents, pending rows); at
+    scale it is O(window + in-flight disorder) per key and spills to
+    RocksDB.
     """
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("cents", T.LongType()),
-            T.StructField("wsum", T.LongType()),
-            T.StructField("denom", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("hist", T.ArrayType(T.LongType())),
-            T.StructField("p_ts", T.ArrayType(T.LongType())),
-            T.StructField("p_eid", T.ArrayType(T.LongType())),
-            T.StructField("p_cents", T.ArrayType(T.LongType())),
-        ]
-    )
-    weights = [1 << (window - j) for j in range(1, window + 1)]
-    thr = int(threshold_cents)
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        hist, p_ts, p_eid, p_c = (
-            ([*state.get[0]], [*state.get[1]], [*state.get[2]], [*state.get[3]])
-            if state.exists
-            else ([], [], [], [])
-        )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                pdf = pdf[pdf[value_col].notna()]
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-                # true-late rows (event time strictly before the batch's
-                # watermark) are DROPPED, the same rule the built-in
-                # stateful operators apply: their predecessors were already
-                # finalized, so scoring them now would replay history out
-                # of order.  Rows AT the watermark are kept (>=): the
-                # finalize step below scores pending rows at p_ts <= wm_us,
-                # so a strict > here would silently drop an at-watermark
-                # row the finalizer would have scored — batch/stream
-                # divergence on the boundary (ADVICE r6).  In-order
-                # sources (range-staged replay, a production landing zone)
-                # never produce late rows at all.
-                live = us >= wm_us
-                if not live.all():
-                    pdf = pdf[live]
-                    us = us[live]
-                    if not len(pdf):
-                        continue
-                # same double expression as the batch twin / oracle:
-                # floor(value*100 + 0.5) on the identical float64 inputs
-                cents = np.floor(
-                    pdf[value_col].values.astype("float64") * 100 + 0.5
-                ).astype("int64")
-                p_ts.extend(int(x) for x in us)
-                p_eid.extend(int(x) for x in pdf["event_id"].values)
-                p_c.extend(int(x) for x in cents)
-        out_rows = []
-        if p_ts:
-            order = np.lexsort((np.asarray(p_eid), np.asarray(p_ts)))
-            rem_ts, rem_eid, rem_c = [], [], []
-            for i in order:
-                i = int(i)
-                if p_ts[i] > wm_us:
-                    rem_ts.append(p_ts[i])
-                    rem_eid.append(p_eid[i])
-                    rem_c.append(p_c[i])
-                    continue
-                x = p_c[i]
-                n_hist = len(hist)
-                if n_hist >= min_lags:
-                    k = min(window, n_hist)
-                    wsum = sum(hist[-j] * weights[j - 1] for j in range(1, k + 1))
-                    denom = sum(weights[:k])
-                    if abs(x * denom - wsum) > thr * denom:
-                        out_rows.append(
-                            (key[0], p_eid[i], p_ts[i], x, wsum, denom)
-                        )
-                hist.append(x)
-                if len(hist) > window:
-                    hist = hist[-window:]
-            p_ts, p_eid, p_c = rem_ts, rem_eid, rem_c
-        state.update((hist[-window:], p_ts, p_eid, p_c))
-        if p_ts:
-            state.setTimeoutTimestamp(
-                max(min(p_ts) // 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[key_col, "event_id", "ts_us", "cents", "wsum", "denom"],
-            )
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _ewma(
+        events, key_col, key_col, ts_col, value_col, threshold_cents, window,
+        min_lags, watermark,
     )
 
 
@@ -1152,168 +1045,12 @@ def stream_ewma_packed(
     watermark: str = "2 hours",
     n_state_buckets: int = 32,
 ) -> DataFrame:
-    """``stream_ewma_deviants`` with PACKED state — third family on the
-    packed-state transform (after locf and keep-latest): keys share
-    ``pmod`` hash buckets so the ~1.3 ms applyInPandasWithState
-    per-group constant is paid per BUCKET per batch, not per key.
-
-    The EWMA recurrence is history-dependent per key, so unlike locf's
-    groupby-ffill the finalize walk stays a Python loop — but the SAME
-    per-row loop the per-key operator runs; what packing removes is the
-    Arrow slicing + state round-trip per key, which dominates (the fold
-    body is microseconds/row).  State per bucket = per-key histories as
-    (u_ids, flattened last-``window`` cents, per-key lengths) plus the
-    pending-row arrays; identical finalize rule (score rows once the
-    watermark passes them, drop true-late rows, (ts, event_id) order).
-
-    Emission parity with the per-key operator is exceptAll-both-ways
-    tested (single- and multi-batch) and the contract shares
-    ``stream_ewma_deviants``' batch oracle shape."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("cents", T.LongType()),
-            T.StructField("wsum", T.LongType()),
-            T.StructField("denom", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("u_ids", T.ArrayType(T.LongType())),
-            T.StructField("h_flat", T.ArrayType(T.LongType())),
-            T.StructField("h_len", T.ArrayType(T.LongType())),
-            T.StructField("p_u", T.ArrayType(T.LongType())),
-            T.StructField("p_ts", T.ArrayType(T.LongType())),
-            T.StructField("p_eid", T.ArrayType(T.LongType())),
-            T.StructField("p_cents", T.ArrayType(T.LongType())),
-        ]
-    )
-    weights = [1 << (window - j) for j in range(1, window + 1)]
-    cumdenom = [sum(weights[:k]) for k in range(window + 1)]
-    thr = int(threshold_cents)
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        hist: dict = {}
-        if state.exists:
-            u_ids, h_flat, h_len, p_u, p_ts, p_eid, p_c = state.get
-            pos = 0
-            for uid, ln in zip(u_ids, h_len):
-                hist[int(uid)] = [int(x) for x in h_flat[pos:pos + ln]]
-                pos += ln
-            p_u = [int(x) for x in p_u]
-            p_ts = [int(x) for x in p_ts]
-            p_eid = [int(x) for x in p_eid]
-            p_c = [int(x) for x in p_c]
-        else:
-            p_u, p_ts, p_eid, p_c = [], [], [], []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                pdf = pdf[pdf[value_col].notna()]
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype(
-                    "int64"
-                )
-                # same boundary rule as the per-key operator: true-late
-                # rows (strictly before the watermark) drop, at-watermark
-                # rows stay
-                live = us >= wm_us
-                if not live.all():
-                    pdf = pdf[live]
-                    us = us[live]
-                    if not len(pdf):
-                        continue
-                cents = np.floor(
-                    pdf[value_col].values.astype("float64") * 100 + 0.5
-                ).astype("int64")
-                p_u.extend(int(x) for x in pdf[key_col].values)
-                p_ts.extend(int(x) for x in us)
-                p_eid.extend(int(x) for x in pdf["event_id"].values)
-                p_c.extend(int(x) for x in cents)
-        out_rows = []
-        if p_ts:
-            # finalize in (key, ts, eid) order: per-key subsequences come
-            # out contiguous and event-time-ordered, so the sequential
-            # recurrence walk below is key-correct in one pass
-            order = np.lexsort(
-                (np.asarray(p_eid), np.asarray(p_ts), np.asarray(p_u))
-            )
-            rem_u, rem_ts, rem_eid, rem_c = [], [], [], []
-            for i in order:
-                i = int(i)
-                if p_ts[i] > wm_us:
-                    rem_u.append(p_u[i])
-                    rem_ts.append(p_ts[i])
-                    rem_eid.append(p_eid[i])
-                    rem_c.append(p_c[i])
-                    continue
-                u = p_u[i]
-                x = p_c[i]
-                h = hist.get(u)
-                if h is None:
-                    h = hist[u] = []
-                n_hist = len(h)
-                if n_hist >= min_lags:
-                    k = min(window, n_hist)
-                    wsum = sum(
-                        h[-j] * weights[j - 1] for j in range(1, k + 1)
-                    )
-                    denom = cumdenom[k]
-                    if abs(x * denom - wsum) > thr * denom:
-                        out_rows.append(
-                            (u, p_eid[i], p_ts[i], x, wsum, denom)
-                        )
-                h.append(x)
-                if len(h) > window:
-                    del h[:-window]
-            p_u, p_ts, p_eid, p_c = rem_u, rem_ts, rem_eid, rem_c
-        u_ids = sorted(hist)
-        h_flat: list = []
-        h_len = []
-        for u in u_ids:
-            h = hist[u][-window:]
-            h_flat.extend(h)
-            h_len.append(len(h))
-        if not u_ids and not p_ts:
-            # fully drained (timeout flushed the last pending rows, or
-            # every ingested value was null): drop the entry instead of
-            # storing empty arrays with no timeout that nothing would
-            # ever remove — state-store hygiene, matching
-            # keep_latest_packed's remove-on-empty (ADVICE r11)
-            if state.exists:
-                state.remove()
-            return
-        state.update((u_ids, h_flat, h_len, p_u, p_ts, p_eid, p_c))
-        if p_ts:
-            state.setTimeoutTimestamp(
-                max(min(p_ts) // 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[
-                    key_col, "event_id", "ts_us", "cents", "wsum", "denom",
-                ],
-            )
-
-    bucketed = events.withColumn(
-        "__bucket", F.pmod(F.col(key_col), F.lit(n_state_buckets))
-    )
-    return (
-        bucketed.withWatermark(ts_col, watermark)
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    """``stream_ewma_deviants`` with PACKED state: keys share
+    ``pmod(key, n_state_buckets)`` state groups (see ``_watermark_fold``).
+    Emits the same rows as the per-key operator."""
+    return _ewma(
+        events, _bucket(key_col, n_state_buckets), key_col, ts_col, value_col,
+        threshold_cents, window, min_lags, watermark,
     )
 
 
@@ -1419,6 +1156,55 @@ def stream_mv_maintenance(
     return state["totals"]
 
 
+def _locf(
+    events: DataFrame,
+    group: str | Column,
+    key_col: str,
+    ts_col: str,
+    value_col: str,
+    watermark: str,
+) -> DataFrame:
+    def step(pending, incoming, wm_ms):
+        if incoming is not None:
+            pending = _append(
+                pending,
+                _cents_rows(
+                    incoming, key_col, "long", ts_col, "event_id", value_col,
+                    wm_ms, keep_null=True,
+                ),
+            )
+        fin, pending = _finalize(pending, wm_ms)
+        hist = {"p_k": pending["h_k"], "p_c": pending["h_c"]}
+        rows, start, end = _after_history(hist, fin)
+        x = rows["p_c"]
+        i = np.arange(len(x))
+        seen = x != _NULL_CENTS
+        last = np.maximum.accumulate(np.where(seen, i, -1))
+        carried = last >= start  # an observation at or before the row, same key
+        # the history keeps each key's last observation
+        keep = seen & (i == last[end - 1])
+        pending.update(h_k=rows["p_k"][keep], h_c=x[keep])
+        out = {
+            key_col: rows["p_k"],
+            "event_id": rows["p_eid"],
+            "ts_us": rows["p_ts"],
+            "cents": pd.arrays.IntegerArray(x[last], ~carried),
+            "was_filled": carried & ~seen,
+        }
+        return _frame(out, rows["new"]), pending
+
+    return _watermark_fold(
+        events,
+        group,
+        ts_col,
+        watermark,
+        f"`{key_col}` long, event_id long, ts_us long, cents long,"
+        " was_filled boolean",
+        {"h_k": "long", "h_c": "long", **_row_state("long")},
+        step,
+    )
+
+
 def stream_locf(
     events: DataFrame,
     key_col: str = "user_id",
@@ -1440,105 +1226,11 @@ def stream_locf(
     finalized subset, bit-for-bit in the cents domain
     (floor(value*100 + 0.5), this module's money convention).
 
-    State per key = (last finalized cents, pending rows) — O(1 +
+    State per key = (last finalized observation, pending rows) — O(1 +
     in-flight disorder), the smallest state any operator in this module
     carries.  Emits (key, event_id, ts_us, cents, was_filled): cents
     NULL only for leading-NULL rows with no prior observation."""
-    NULL_SENT = -(2**62)  # NULL cents inside the long-array state
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("cents", T.LongType()),
-            T.StructField("was_filled", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("last_cents", T.LongType()),
-            T.StructField("p_ts", T.ArrayType(T.LongType())),
-            T.StructField("p_eid", T.ArrayType(T.LongType())),
-            T.StructField("p_cents", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        last, p_ts, p_eid, p_c = (
-            (state.get[0], [*state.get[1]], [*state.get[2]], [*state.get[3]])
-            if state.exists
-            else (NULL_SENT, [], [], [])
-        )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-                live = us >= wm_us  # same boundary rule as stream_ewma
-                pdf, us = pdf[live], us[live]
-                if not len(pdf):
-                    continue
-                vals = pdf[value_col].values.astype("float64")
-                nan = np.isnan(vals)
-                # mask BEFORE the int64 cast: NaN->int is undefined-result
-                # territory and numpy emits a RuntimeWarning per micro-batch
-                # (the sentinel overwrite below made it benign but noisy)
-                cents = np.where(nan, 0.0, np.floor(vals * 100 + 0.5)).astype(
-                    "int64"
-                )
-                cents[nan] = NULL_SENT
-                p_ts.extend(int(x) for x in us)
-                p_eid.extend(int(x) for x in pdf["event_id"].values)
-                p_c.extend(int(x) for x in cents)
-        out_rows = []
-        if p_ts:
-            order = np.lexsort((np.asarray(p_eid), np.asarray(p_ts)))
-            rem_ts, rem_eid, rem_c = [], [], []
-            for i in order:
-                i = int(i)
-                if p_ts[i] > wm_us:
-                    rem_ts.append(p_ts[i])
-                    rem_eid.append(p_eid[i])
-                    rem_c.append(p_c[i])
-                    continue
-                raw = p_c[i]
-                filled = raw == NULL_SENT and last != NULL_SENT
-                eff = last if raw == NULL_SENT else raw
-                out_rows.append(
-                    (
-                        key[0],
-                        p_eid[i],
-                        p_ts[i],
-                        None if eff == NULL_SENT else eff,
-                        bool(filled),
-                    )
-                )
-                if raw != NULL_SENT:
-                    last = raw
-            p_ts, p_eid, p_c = rem_ts, rem_eid, rem_c
-        state.update((last, p_ts, p_eid, p_c))
-        if p_ts:
-            state.setTimeoutTimestamp(
-                max(min(p_ts) // 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[key_col, "event_id", "ts_us", "cents", "was_filled"],
-            )
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return _locf(events, key_col, key_col, ts_col, value_col, watermark)
 
 
 def stream_locf_packed(
@@ -1549,178 +1241,86 @@ def stream_locf_packed(
     watermark: str = "2 hours",
     n_state_buckets: int = 32,
 ) -> DataFrame:
-    """``stream_locf`` with PACKED state: many logical keys share one
-    physical state group — the 100 TB state-scaling technique this
-    module's per-key operators eventually need.
-
-    Why it exists (measured, round 9): ``applyInPandasWithState`` costs
-    ~1.3 ms per GROUP INVOCATION regardless of fold body (a trivial
-    count-fold at 1500 keys replays in 2.9 s vs 0.96 s at 10 keys on
-    the same data — pure Arrow group slicing + state round-trip), so a
-    per-key operator pays keys x batches x 1.3 ms: at a production
-    10M-key stream that is the whole budget.  Packing keys into
-    ``n_state_buckets`` hash buckets (pmod of the key — deterministic,
-    uniform for long ids) makes the per-group constant pay once per
-    BUCKET per batch, and the per-key logic runs vectorized
-    (pandas groupby-ffill over the bucket's rows) instead of once per
-    key.  Size ``n_state_buckets`` ~= shuffle partitions x small
-    constant: enough groups to keep every core busy, few enough that
-    the group constant vanishes.
-
-    Semantics are IDENTICAL to ``stream_locf`` (same watermark boundary
-    rule, same finalize-in-(ts,event_id)-order, same carry/was_filled
-    definitions) — asserted by the packed-vs-per-key parity test and by
-    sharing the batch census oracle verbatim.  State per bucket =
-    (keys with a last observation, their last cents) + pending rows as
-    flat parallel arrays — O(keys/bucket + in-flight disorder)."""
-    NULL_SENT = -(2**62)
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("cents", T.LongType()),
-            T.StructField("was_filled", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("u_ids", T.ArrayType(T.LongType())),
-            T.StructField("u_last", T.ArrayType(T.LongType())),
-            T.StructField("p_u", T.ArrayType(T.LongType())),
-            T.StructField("p_ts", T.ArrayType(T.LongType())),
-            T.StructField("p_eid", T.ArrayType(T.LongType())),
-            T.StructField("p_cents", T.ArrayType(T.LongType())),
-        ]
+    """``stream_locf`` with PACKED state: keys share ``pmod(key,
+    n_state_buckets)`` state groups (see ``_watermark_fold``).  Size
+    ``n_state_buckets`` ~= shuffle partitions x a small constant: enough
+    groups to keep every core busy, few enough that the per-group
+    constant vanishes.  Emits the same rows as the per-key operator."""
+    return _locf(
+        events, _bucket(key_col, n_state_buckets), key_col, ts_col, value_col,
+        watermark,
     )
 
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            u_ids, u_last, p_u, p_ts, p_eid, p_c = (
-                np.asarray(x, dtype="int64") for x in state.get
-            )
-        else:
-            u_ids = u_last = p_u = p_ts = p_eid = p_c = np.empty(
-                0, dtype="int64"
-            )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype(
-                    "int64"
-                )
-                live = us >= wm_us  # same boundary rule as stream_locf
-                if not live.any():
-                    continue
-                pdf, us = pdf[live], us[live]
-                vals = pdf[value_col].values.astype("float64")
-                nan = np.isnan(vals)
-                cents = np.where(
-                    nan, 0.0, np.floor(vals * 100 + 0.5)
-                ).astype("int64")
-                cents[nan] = NULL_SENT
-                p_u = np.concatenate(
-                    [p_u, pdf[key_col].values.astype("int64")]
-                )
-                p_ts = np.concatenate([p_ts, us])
-                p_eid = np.concatenate(
-                    [p_eid, pdf["event_id"].values.astype("int64")]
-                )
-                p_c = np.concatenate([p_c, cents])
-        out = None
-        if len(p_ts):
-            fin = p_ts <= wm_us
-            if fin.any():
-                fu, ft, fe, fc = p_u[fin], p_ts[fin], p_eid[fin], p_c[fin]
-                order = np.lexsort((fe, ft, fu))
-                fu, ft, fe, fc = fu[order], ft[order], fe[order], fc[order]
-                raw = fc.astype("float64")
-                raw[fc == NULL_SENT] = np.nan
-                # last-known value per key, seeded from bucket state
-                seed_map = pd.Series(
-                    u_last.astype("float64"), index=u_ids
-                )
-                seed_map[seed_map == float(NULL_SENT)] = np.nan
-                eff = (
-                    pd.Series(raw)
-                    .groupby(pd.Series(fu), sort=False)
-                    .ffill()
-                    .to_numpy()
-                )
-                head = np.isnan(eff)  # rows before a key's first non-NULL
-                if head.any():
-                    eff[head] = seed_map.reindex(fu[head]).to_numpy()
-                filled = np.isnan(raw) & ~np.isnan(eff)
-                # new last per key = last non-NULL RAW in (ts, eid) order
-                valid = ~np.isnan(raw)
-                if valid.any():
-                    lasts = (
-                        pd.Series(raw[valid])
-                        .groupby(pd.Series(fu[valid]), sort=False)
-                        .last()
-                    )
-                    seed_map = seed_map.reindex(
-                        seed_map.index.union(lasts.index)
-                    )
-                    seed_map[lasts.index] = lasts.to_numpy()
-                u_ids = seed_map.index.to_numpy(dtype="int64")
-                u_last = np.where(
-                    np.isnan(seed_map.to_numpy()),
-                    NULL_SENT,
-                    np.nan_to_num(seed_map.to_numpy()),
-                ).astype("int64")
-                out = pd.DataFrame(
-                    {
-                        key_col: fu,
-                        "event_id": fe,
-                        "ts_us": ft,
-                        "cents": pd.array(
-                            np.where(np.isnan(eff), 0, eff).astype("int64"),
-                            dtype="Int64",
-                        ),
-                        "was_filled": filled,
-                    }
-                )
-                out.loc[np.isnan(eff), "cents"] = None
-                rem = ~fin
-                p_u, p_ts, p_eid, p_c = (
-                    p_u[rem], p_ts[rem], p_eid[rem], p_c[rem],
-                )
-        state.update(
-            (
-                [int(x) for x in u_ids],
-                [int(x) for x in u_last],
-                [int(x) for x in p_u],
-                [int(x) for x in p_ts],
-                [int(x) for x in p_eid],
-                [int(x) for x in p_c],
-            )
+
+def _cusum(
+    events: DataFrame,
+    group: str | Column,
+    key_col: str,
+    ts_col: str,
+    value_col: str,
+    target_cents: int,
+    slack_cents: int,
+    threshold_cents: int,
+    watermark: str,
+    tiebreak_col: str,
+    scale: int,
+) -> DataFrame:
+    tb_type = {f.name: f.dataType for f in events.schema.fields}.get(
+        tiebreak_col
+    )
+    if tb_type is not None and not isinstance(
+        tb_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    ):
+        raise ValueError(
+            f"stream_cusum tiebreak_col {tiebreak_col!r} must be an"
+            f" integral column (got {tb_type.simpleString()}); its value"
+            " rides the LongType state/output schema exactly like batch"
+            " cusum_points' long tiebreak"
         )
-        if len(p_ts):
-            state.setTimeoutTimestamp(
-                max(
-                    int(p_ts.min()) // 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            )
-        if out is not None and len(out):
-            yield out
+    drift = target_cents + slack_cents
 
-    bucketed = events.withColumn(
-        "__bucket", F.pmod(F.col(key_col), F.lit(n_state_buckets))
-    )
-    return (
-        bucketed.withWatermark(ts_col, watermark)
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    def step(pending, incoming, wm_ms):
+        if incoming is not None:
+            pending = _append(
+                pending,
+                _cents_rows(
+                    incoming, key_col, "string", ts_col, tiebreak_col,
+                    value_col, wm_ms, scale,
+                ),
+            )
+        fin, pending = _finalize(pending, wm_ms)
+        # a key's carried counters (h_c, h_m) lead its run, (0, 0) for a
+        # new key; then per finalized row c += cents - drift, m = min(m, c)
+        hist = {"p_k": pending["h_k"], "p_c": pending["h_c"], "m": pending["h_m"]}
+        rows, start, end = _after_history(hist, fin)
+        new = rows["new"]
+        step_c = np.where(new, rows["p_c"] - drift, rows["p_c"])
+        cum = np.cumsum(step_c)
+        c = cum - cum[start] + step_c[start]
+        runs = np.split(c, np.unique(start)[1:])
+        run_min = np.concatenate([np.minimum.accumulate(r) for r in runs])
+        m = np.minimum(run_min, rows["m"][start])
+        tail = np.arange(len(c)) == end - 1
+        pending.update(h_k=rows["p_k"][tail], h_c=c[tail], h_m=m[tail])
+        stat = c - m
+        out = {
+            key_col: rows["p_k"],
+            tiebreak_col: rows["p_eid"],
+            "ts_us": rows["p_ts"],
+            "stat_cents": stat,
+            "is_alert": stat > threshold_cents,
+        }
+        return _frame(out, new), pending
+
+    return _watermark_fold(
+        events.filter(F.col(value_col).isNotNull()),
+        group,
+        ts_col,
+        watermark,
+        f"`{key_col}` string, `{tiebreak_col}` long, ts_us long,"
+        " stat_cents long, is_alert boolean",
+        {"h_k": "string", "h_c": "long", "h_m": "long", **_row_state("string")},
+        step,
     )
 
 
@@ -1757,118 +1357,14 @@ def stream_cusum(
     exactly (defaults ``event_id`` / 2), so non-default batch callers
     get the same stream twin, not a silently divergent one.
     ``tiebreak_col`` MUST be an integral column (it is carried through
-    state arrays and the output schema as a long) — validated below
+    state arrays and the output schema as a long) — validated up front
     rather than failing at Arrow conversion or silently truncating a
-    float (ADVICE r10).
+    float (ADVICE r10).  The key is carried as a string.
 
     Emits ``(key, tiebreak, ts_us, stat_cents, is_alert)``."""
-    tb_type = {f.name: f.dataType for f in events.schema.fields}.get(
-        tiebreak_col
-    )
-    if tb_type is not None and not isinstance(
-        tb_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise ValueError(
-            f"stream_cusum tiebreak_col {tiebreak_col!r} must be an"
-            f" integral column (got {tb_type.simpleString()}); its value"
-            " rides the LongType state/output schema exactly like batch"
-            " cusum_points' long tiebreak"
-        )
-    drift = target_cents + slack_cents
-    m_scale = 10 ** scale
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(tiebreak_col, T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("stat_cents", T.LongType()),
-            T.StructField("is_alert", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("c_cum", T.LongType()),
-            T.StructField("c_min", T.LongType()),
-            T.StructField("p_ts", T.ArrayType(T.LongType())),
-            T.StructField("p_eid", T.ArrayType(T.LongType())),
-            T.StructField("p_cents", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        c, mn, p_ts, p_eid, p_c = (
-            (
-                state.get[0],
-                state.get[1],
-                [*state.get[2]],
-                [*state.get[3]],
-                [*state.get[4]],
-            )
-            if state.exists
-            else (0, 0, [], [], [])
-        )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype(
-                    "int64"
-                )
-                live = us >= wm_us
-                pdf, us = pdf[live], us[live]
-                if not len(pdf):
-                    continue
-                vals = pdf[value_col].values.astype("float64")
-                ok = ~np.isnan(vals)
-                cents = np.zeros(len(vals), dtype="int64")
-                cents[ok] = np.floor(vals[ok] * m_scale + 0.5).astype(
-                    "int64"
-                )
-                p_ts.extend(int(x) for x in us[ok])
-                p_eid.extend(int(x) for x in pdf[tiebreak_col].values[ok])
-                p_c.extend(int(x) for x in cents[ok])
-        out_rows = []
-        if p_ts:
-            order = np.lexsort((np.asarray(p_eid), np.asarray(p_ts)))
-            rem_ts, rem_eid, rem_c = [], [], []
-            for i in order:
-                i = int(i)
-                if p_ts[i] > wm_us:
-                    rem_ts.append(p_ts[i])
-                    rem_eid.append(p_eid[i])
-                    rem_c.append(p_c[i])
-                    continue
-                c += p_c[i] - drift
-                mn = min(mn, c)
-                s = c - mn
-                out_rows.append(
-                    (key[0], p_eid[i], p_ts[i], s, s > threshold_cents)
-                )
-            p_ts, p_eid, p_c = rem_ts, rem_eid, rem_c
-        state.update((c, mn, p_ts, p_eid, p_c))
-        if p_ts:
-            state.setTimeoutTimestamp(
-                max(min(p_ts) // 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[key_col, tiebreak_col, "ts_us", "stat_cents",
-                         "is_alert"],
-            )
-
-    return (
-        events.filter(F.col(value_col).isNotNull())
-        .withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _cusum(
+        events, key_col, key_col, ts_col, value_col, target_cents,
+        slack_cents, threshold_cents, watermark, tiebreak_col, scale,
     )
 
 
@@ -1885,180 +1381,13 @@ def stream_cusum_packed(
     scale: int = 2,
     n_state_buckets: int = 32,
 ) -> DataFrame:
-    """``stream_cusum`` with PACKED state — fourth family on the
-    packed-state transform (after locf, keep-latest and ewma): keys
-    share ``pmod(hash(key), n_state_buckets)`` buckets so the measured
-    ~1.3 ms applyInPandasWithState per-GROUP-invocation constant is
-    paid per bucket per batch, not per key — at a 10M-key stream the
-    per-key form's whole budget is that constant.
-
-    CUSUM is the friendliest recurrence for packing: the entire per-key
-    history compresses to TWO long counters (``c`` running deviation
-    sum, ``m`` its clamped running min), so bucket state is three flat
-    parallel arrays (key, c, m) plus the in-flight disorder buffer.
-    The finalize walk stays the per-key operator's fold VERBATIM — rows
-    sort by (key, ts, tiebreak) so per-key subsequences come out
-    contiguous and event-time-ordered, and the two counters thread
-    through exactly as the per-key state would.  The hash bucketing
-    (rather than locf/ewma's ``pmod(key)``) keeps the transform
-    key-type-generic: ``stream_cusum`` keys on a STRING metric name.
-
-    Emission protocol, null handling, the true-late drop rule
-    (``ts < watermark`` drops, at-watermark stays), the
-    round-half-up cents conversion and the integral-tiebreak
-    validation are all identical to ``stream_cusum``; packed == per-key
-    is exceptAll-both-ways parity-tested and the contract shares the
-    per-key operator's batch-closed-form oracle verbatim.
-
-    Emits ``(key, tiebreak, ts_us, stat_cents, is_alert)``."""
-    tb_type = {f.name: f.dataType for f in events.schema.fields}.get(
-        tiebreak_col
-    )
-    if tb_type is not None and not isinstance(
-        tb_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise ValueError(
-            f"stream_cusum_packed tiebreak_col {tiebreak_col!r} must be"
-            f" an integral column (got {tb_type.simpleString()}); its"
-            " value rides the LongType state/output schema exactly like"
-            " batch cusum_points' long tiebreak"
-        )
-    drift = target_cents + slack_cents
-    m_scale = 10 ** scale
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(tiebreak_col, T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("stat_cents", T.LongType()),
-            T.StructField("is_alert", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("k_ids", T.ArrayType(T.StringType())),
-            T.StructField("k_c", T.ArrayType(T.LongType())),
-            T.StructField("k_min", T.ArrayType(T.LongType())),
-            T.StructField("p_k", T.ArrayType(T.StringType())),
-            T.StructField("p_ts", T.ArrayType(T.LongType())),
-            T.StructField("p_eid", T.ArrayType(T.LongType())),
-            T.StructField("p_cents", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def fold(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        counters: dict = {}
-        if state.exists:
-            k_ids, k_c, k_min, p_k, p_ts, p_eid, p_c = state.get
-            for kk, cc, mm in zip(k_ids, k_c, k_min):
-                counters[str(kk)] = [int(cc), int(mm)]
-            p_k = [str(x) for x in p_k]
-            p_ts = [int(x) for x in p_ts]
-            p_eid = [int(x) for x in p_eid]
-            p_c = [int(x) for x in p_c]
-        else:
-            p_k, p_ts, p_eid, p_c = [], [], [], []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                us = pdf[ts_col].values.astype("datetime64[us]").astype(
-                    "int64"
-                )
-                # same boundary rule as the per-key operator: true-late
-                # rows (strictly before the watermark) drop
-                live = us >= wm_us
-                pdf, us = pdf[live], us[live]
-                if not len(pdf):
-                    continue
-                vals = pdf[value_col].values.astype("float64")
-                ok = ~np.isnan(vals)
-                cents = np.zeros(len(vals), dtype="int64")
-                cents[ok] = np.floor(vals[ok] * m_scale + 0.5).astype(
-                    "int64"
-                )
-                p_k.extend(str(x) for x in pdf[key_col].values[ok])
-                p_ts.extend(int(x) for x in us[ok])
-                p_eid.extend(int(x) for x in pdf[tiebreak_col].values[ok])
-                p_c.extend(int(x) for x in cents[ok])
-        out_rows = []
-        if p_ts:
-            # finalize in (key, ts, eid) order: per-key subsequences come
-            # out contiguous and event-time-ordered, so the two-counter
-            # walk below threads each key's state exactly like the
-            # per-key fold
-            kidx = {}
-            k_codes = np.fromiter(
-                (kidx.setdefault(k, len(kidx)) for k in p_k),
-                dtype="int64",
-                count=len(p_k),
-            )
-            order = np.lexsort(
-                (np.asarray(p_eid), np.asarray(p_ts), k_codes)
-            )
-            rem_k, rem_ts, rem_eid, rem_c = [], [], [], []
-            for i in order:
-                i = int(i)
-                if p_ts[i] > wm_us:
-                    rem_k.append(p_k[i])
-                    rem_ts.append(p_ts[i])
-                    rem_eid.append(p_eid[i])
-                    rem_c.append(p_c[i])
-                    continue
-                k = p_k[i]
-                st = counters.get(k)
-                if st is None:
-                    st = counters[k] = [0, 0]
-                st[0] += p_c[i] - drift
-                if st[0] < st[1]:
-                    st[1] = st[0]
-                s = st[0] - st[1]
-                out_rows.append(
-                    (k, p_eid[i], p_ts[i], s, s > threshold_cents)
-                )
-            p_k, p_ts, p_eid, p_c = rem_k, rem_ts, rem_eid, rem_c
-        if not counters and not p_ts:
-            # fully drained: no counters and nothing pending — drop the
-            # entry instead of parking empty arrays with no timeout
-            # (the ADVICE r11 hygiene rule all packed families follow)
-            if state.exists:
-                state.remove()
-            return
-        k_ids = sorted(counters)
-        state.update(
-            (
-                k_ids,
-                [counters[k][0] for k in k_ids],
-                [counters[k][1] for k in k_ids],
-                p_k,
-                p_ts,
-                p_eid,
-                p_c,
-            )
-        )
-        if p_ts:
-            state.setTimeoutTimestamp(
-                max(min(p_ts) // 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[key_col, tiebreak_col, "ts_us", "stat_cents",
-                         "is_alert"],
-            )
-
-    bucketed = events.filter(F.col(value_col).isNotNull()).withColumn(
-        "__bucket", F.pmod(F.hash(F.col(key_col)), F.lit(n_state_buckets))
-    )
-    return (
-        bucketed.withWatermark(ts_col, watermark)
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fold,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    """``stream_cusum`` with PACKED state: keys share
+    ``pmod(hash(key), n_state_buckets)`` state groups (see
+    ``_watermark_fold``); hashing keeps the bucketing key-type-generic,
+    as ``stream_cusum`` keys on a STRING metric name.  Emits the same
+    rows as the per-key operator."""
+    bucket = F.pmod(F.hash(F.col(key_col)), F.lit(n_state_buckets))
+    return _cusum(
+        events, bucket, key_col, ts_col, value_col, target_cents,
+        slack_cents, threshold_cents, watermark, tiebreak_col, scale,
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from shuttle_spark.catalog import load_table
@@ -59,6 +60,7 @@ def test_windowed_agg_stream_equals_batch(spark):
     assert _rows(got.filter(F.col("w") + F.expr("INTERVAL 1 HOUR") <= F.lit(cutoff))) == want
 
 
+@pytest.mark.slow
 def test_session_stream_equals_batch(spark):
     got = run_available_now(
         session_agg_stream(events_stream(spark, SF), "30 minutes", "2 hours"),
@@ -83,6 +85,7 @@ def test_session_stream_equals_batch(spark):
     assert _rows(got.filter(F.col("session_end") <= F.lit(cutoff))) == want
 
 
+@pytest.mark.slow
 def test_stream_dedup_is_exact_on_unique_keys(spark):
     got = run_available_now(
         stream_dedup(events_stream(spark, SF), ["event_id"], "2 hours"),
@@ -93,6 +96,7 @@ def test_stream_dedup_is_exact_on_unique_keys(spark):
     assert got.select("event_id").distinct().count() == got.count()
 
 
+@pytest.mark.slow
 def test_stream_keep_latest_equals_batch(spark):
     got = run_available_now(
         stream_keep_latest(events_stream(spark, SF)), "kl_stream"
@@ -111,6 +115,7 @@ def test_stream_keep_latest_equals_batch(spark):
     assert _rows(got) == want
 
 
+@pytest.mark.slow
 def test_stream_file_sink_roundtrip(spark):
     """Streaming ETL to a parquet file sink (AvailableNow): the output of a
     replayed windowed aggregation lands as parquet and reads back equal to
@@ -173,6 +178,7 @@ def test_upsert_sink_is_idempotent_and_matches_batch(spark):
     assert rows2 == rows1
 
 
+@pytest.mark.slow
 def test_upsert_sink_zero_batch_stream_is_empty_state(spark):
     """A stream over an empty landing dir runs zero batches; the sink must
     return empty state (not IndexError on a fresh versionless path —
@@ -193,61 +199,6 @@ def test_upsert_sink_zero_batch_stream_is_empty_state(spark):
     state = run_upsert_sink(stream, state_path, shuffle_partitions=2)
     assert state.count() == 0
     assert set(state.columns) == {"user_id", "ts", "event_id", "event_type"}
-
-
-def test_stream_keep_latest_tws_matches_batch(spark):
-    """transformWithState (Spark 4 successor stateful API) twin of
-    stream_keep_latest: the last update per key equals the batch
-    keep-latest.  Requires google.protobuf (the TWS python runner's
-    state-server protocol); where it is absent the operator must fail
-    fast with a clear ImportError BEFORE any query starts — both branches
-    are asserted, so this test never skips."""
-    import pytest
-
-    from shuttle_spark.streaming.core import tws_available
-
-    if not tws_available():
-        from shuttle_spark.streaming.core import (
-            events_stream_multi,
-            stream_keep_latest_tws,
-        )
-
-        with pytest.raises(ImportError, match="google.protobuf"):
-            stream_keep_latest_tws(
-                events_stream_multi(spark, "/root/testdata/sf0.001", n_files=4)
-            )
-        return
-
-    from pyspark.sql import functions as F
-
-    from shuttle_spark.catalog import load_table
-    from shuttle_spark.operators import dedup as D
-    from shuttle_spark.streaming.core import (
-        events_stream_multi,
-        run_available_now,
-        stream_keep_latest_tws,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    out = run_available_now(
-        stream_keep_latest_tws(events_stream_multi(spark, sf, n_files=4)),
-        output_mode="update",
-        shuffle_partitions=4,
-        session_conf={
-            "spark.sql.streaming.stateStore.providerClass":
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-        },
-    )
-    final = D.keep_latest(
-        out, ["user_id"], [F.col("ts_us").desc(), F.col("event_id").desc()]
-    )
-    want = D.keep_latest(
-        load_table(spark, sf, "events"),
-        ["user_id"],
-        [F.col("ts").desc(), F.col("event_id").desc()],
-    ).select("user_id", F.unix_micros("ts").alias("ts_us"), "event_id", "event_type")
-    assert sorted(map(tuple, final.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_decontaminate_sink_zero_batch_stream_is_empty_corpus(spark):
@@ -343,6 +294,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 
+@pytest.mark.slow
 @given(
     window=st.sampled_from(["30 minutes", "1 hour", "3 hours"]),
     watermark=st.sampled_from(["1 hour", "2 hours"]),
@@ -407,6 +359,7 @@ def test_fuzz_stream_batch_window_equivalence(spark, window, watermark, key, mod
     assert got == batch
 
 
+@pytest.mark.slow
 def test_stream_ewma_equals_batch_single_and_multi_batch(spark):
     """stream_ewma_deviants == relational.ewma_deviants on the finalized
     subset, bit-for-bit — in BOTH replay shapes: single-batch (all rows
@@ -615,6 +568,7 @@ def test_stream_locf_equals_batch_single_and_multi_batch(spark):
     assert any(r[-1] for r in want)  # the data exercises real fills
 
 
+@pytest.mark.slow
 def test_stream_locf_packed_parity_and_batch_equality(spark):
     """stream_locf_packed == stream_locf row-for-row (exceptAll both
     ways, full output including the not-yet-finalized-free tail) AND ==
@@ -653,6 +607,7 @@ def test_stream_locf_packed_parity_and_batch_equality(spark):
         assert packed.filter(F.col("was_filled")).count() > 0, name
 
 
+@pytest.mark.slow
 def test_stream_keep_latest_packed_parity(spark):
     """stream_keep_latest_packed == stream_keep_latest row-for-row
     (exceptAll both ways), single- and multi-batch — the packed form is
@@ -722,6 +677,7 @@ def test_stream_cusum_equals_batch_single_and_multi_batch(spark):
     assert any(r[-1] for r in want) and not all(r[-1] for r in want)
 
 
+@pytest.mark.slow
 def test_stream_ewma_packed_parity(spark):
     """stream_ewma_packed == stream_ewma_deviants row-for-row (exceptAll
     both ways), single- and multi-batch — packing is a physical layout
@@ -787,6 +743,7 @@ def test_stream_cusum_rejects_non_integral_tiebreak(spark):
         stream_cusum_packed(src, tiebreak_col="value")
 
 
+@pytest.mark.slow
 def test_stream_cusum_packed_parity(spark):
     """stream_cusum_packed == stream_cusum row-for-row (exceptAll both
     ways), single- and multi-batch — packing is a physical layout
@@ -838,3 +795,42 @@ def test_replay_partitions_tracks_local_cores(spark):
         assert p == max(4, min(16, cores))
     # bounds are parameters, not constants
     assert replay_partitions(spark, lo=2, hi=8) <= 8
+
+
+def test_replay_partitions_parses_local_task_failure_masters():
+    """local[N,F] and local[*,F] (F = max task failures) are legal
+    masters: only the core count feeds the dial."""
+    import os
+    from types import SimpleNamespace
+
+    from shuttle_spark.streaming.core import replay_partitions
+
+    def stub(master):
+        ctx = SimpleNamespace(master=master, defaultParallelism=1)
+        return SimpleNamespace(sparkContext=ctx)
+
+    assert replay_partitions(stub("local[4,2]")) == 4
+    assert replay_partitions(stub("local[12,3]")) == 12
+    assert replay_partitions(stub("local[*,3]")) == max(
+        4, min(16, os.cpu_count() or 4)
+    )
+    assert replay_partitions(stub("local[8]")) == 8
+
+
+def test_run_available_now_deletes_its_checkpoint(spark):
+    """The replay's checkpoint only serves that one run: it is gone once
+    the query terminates, while the result stays readable from the
+    memory sink."""
+    import glob
+    import os
+    import tempfile
+
+    from shuttle_spark.streaming.core import _scratch_root
+
+    name = "ckpt_cleanup_probe"
+    out = run_available_now(
+        windowed_agg_stream(events_stream(spark, SF)), name, shuffle_partitions=4
+    )
+    assert out.count() > 0
+    root = _scratch_root() or tempfile.gettempdir()
+    assert glob.glob(os.path.join(root, f"ckpt_{name}_*")) == []
