@@ -1672,7 +1672,8 @@ def q_ngram_jaccard_prefix(spark: SparkSession, sf: str) -> DataFrame:
     ng - ceil(tau*ng) + 1 rarest grams, yet the output is EXACTLY the
     full-index algorithm's (same brute-force oracle as
     ngram_jaccard_pairs) — the prefix theorem guarantees candidate
-    completeness and the join-local array_intersect verify is exact.
+    completeness and the array_intersect verify over the attached full
+    gram sets is exact.
     At high tau the candidate fan-out drops by orders of magnitude and
     ubiquitous grams never enter the index (the O(f^2) hazard), with
     zero recall cost."""
@@ -6032,8 +6033,8 @@ def q_semantic_dedup_kept(spark: SparkSession, sf: str) -> DataFrame:
     sim is ONE correctly-rounded sqrt + divide of identical ints — no
     threshold straddle is possible.  Gate path is the size-guarded
     broadcast int-matmul kernel; the 100 TB path is exact=False (sign-LSH
-    banded candidates + the same integer verify join-local), superset-
-    tested in tests/test_similarity.py."""
+    banded candidates + the same integer verify on attached vectors),
+    superset-tested in tests/test_operators.py."""
     emb = load_table(spark, sf, "embeddings")
     return S.semantic_dedup(emb, threshold=0.4).select("vec_id", "label")
 
@@ -8232,7 +8233,7 @@ def q_ivf_upsert_equal(spark: SparkSession, sf: str) -> DataFrame:
     # |m exceptAll r| + |r exceptAll m| (multiset symmetric difference),
     # and mismatch==0 already implies n_maintained == n_post because
     # `rebuilt` is row-for-row with `post` — so the old n_m == n_post
-    # conjunct is subsumed.  Interleaved A/B (tools/ivf_upsert_ab.py,
+    # conjunct is subsumed.  Interleaved A/B (OPTIMIZATION_r13.md item 1,
     # 4 paired rounds): unionw median 4.8 s vs tagged 9.9 / sequential
     # 8.5; plans/r13/ivf_upsert_verifyjob_{tagged,unionw}.txt show the
     # Python assignment stages drop from 5-dup to single evaluation.

@@ -237,7 +237,7 @@ def snapshot_diff(
     table's ``HashPartitioning(keys)``, so bucketed snapshots shuffle
     anyway — with plain equality the full-outer sort-merge join elides
     BOTH exchanges on key-bucketed inputs (the 100 TB deployment shape;
-    measured in tools/cdc_bucketed_scale.py)."""
+    measured in BASELINE.md, "CDC inverse-pair residual")."""
     if not keys:
         raise ValueError("snapshot_diff: keys must be non-empty")
     o = old.select(

@@ -11,12 +11,13 @@ The LLM-pipeline dedup family (SURVEY.md §2.B B28).  Design notes for the
   pipeline at ~2 ms/doc vs ~1 µs/doc for a vectorized Arrow
   (pandas_udf) stage — so shingling runs as one Arrow batch stage and
   everything downstream of the exploded gram relation stays JVM-side.
-* **Candidate generation is a hash-partitioned equi-join** on
-  (band_idx, band_key) — exactly the shuffle shape the reference's service
-  exists to execute (partition -> group-by-key -> merge); AQE skew-join
-  splits hot buckets (a universal shingle at 100 TB is a skewed key).
-* **Exact verification is join-local**: candidates carry their shingle
-  arrays, so Jaccard is computed without another shuffle.
+* **Candidate generation is one kernel** (``pairs.key_pairs``): a
+  hash-partitioned equi-join on the blocking key — a gram, a
+  (band_idx, band_key) or a (chunk_idx, chunk) — grouped per id pair,
+  exactly the shuffle shape the reference's service exists to execute
+  (partition -> group-by-key -> merge).
+* **Pairs are decided on narrow rows**: shingle sets never ride the key
+  join; the verify step attaches each side's set once (``pairs.attach``).
 * ``max_df`` stop-gram filtering caps the blow-up of ubiquitous shingles at
   scale (a shingle occurring in f docs contributes O(f²) candidate pairs).
 
@@ -37,6 +38,7 @@ from pyspark.sql import functions as F
 
 from shuttle_spark.cache import DFCache, semantic_key
 from shuttle_spark.functions import text as TX
+from shuttle_spark.operators.pairs import attach, key_pairs, one_per_id
 
 # Mersenne prime 2^31-1: permutation hash space.  a*h+b stays < 2^62, no
 # int64 overflow.
@@ -141,6 +143,30 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(den == 0, F.lit(0.0)).otherwise(inter / den)
 
 
+def _gram_index(grams: DataFrame) -> DataFrame:
+    """Inverted index of an (id, grams) relation: (id, n = set size, g)."""
+    return grams.select(
+        "id", F.size("grams").alias("n"), F.explode("grams").alias("g")
+    )
+
+
+def _overlap_jaccard(shared: DataFrame, tau: float, a: str, b: str) -> DataFrame:
+    """(a, b, jac >= tau) from a ``key_pairs`` result over gram indexes:
+    Jaccard from the shared-gram count ``inter`` and the set sizes
+    n_a/n_b, rounded to 6 places."""
+    return (
+        shared.withColumn(
+            "jac", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+        )
+        .filter(F.col("jac") >= tau)
+        .select(
+            F.col("id_a").alias(a),
+            F.col("id_b").alias(b),
+            F.round("jac", 6).alias("jac"),
+        )
+    )
+
+
 def near_dup_pairs_exact(
     df: DataFrame,
     tau: float,
@@ -168,13 +194,9 @@ def near_dup_pairs_exact(
         hit = _pairs_cache.get(key)
         if hit is not None:
             return hit
-    grams = gram_sets(df, id_col, text_col, n, reuse=reuse)
     # Inverted index carrying the set size: the pair aggregation then needs
-    # NO size-lookup joins (na/nb are functionally dependent on the ids, so
-    # grouping by them is free) — one self-join + one groupBy total.
-    inv = grams.select(
-        "id", F.size("grams").alias("ng"), F.explode("grams").alias("g")
-    )
+    # NO size-lookup joins — one self-join + one groupBy total.
+    inv = _gram_index(gram_sets(df, id_col, text_col, n, reuse=reuse))
     if max_df is not None:
         # NO static broadcast: the keep set is the distinct gram vocabulary,
         # which grows with the corpus (measured 29.6 GiB at a 100x stress —
@@ -183,31 +205,7 @@ def near_dup_pairs_exact(
         # side is actually small.
         keep = inv.groupBy("g").count().filter(F.col("count") <= max_df).select("g")
         inv = inv.join(keep.hint("merge"), "g")
-    # Candidate self-joins must never be planned as static broadcasts:
-    # Catalyst's size estimate under union/explode/UDF chains is unreliable
-    # (the same 100x stress saw the banded relation estimated broadcastable
-    # while materializing to tens of GiB).  hint("merge") pins sort-merge —
-    # AQE still skew-splits hot keys and can runtime-convert truly small
-    # sides.
-    a, b = inv.alias("a").hint("merge"), inv.alias("b")
-    shared = (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.ng").alias("na"),
-            F.col("b.ng").alias("nb"),
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        shared.withColumn(
-            "jac",
-            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")),
-        )
-        .filter(F.col("jac") >= tau)
-        .select("id_a", "id_b", F.round("jac", 6).alias("jac"))
-    )
+    out = _overlap_jaccard(key_pairs(inv, on=["g"]), tau, "id_a", "id_b")
     if reuse:
         out = _pairs_cache.put(key, df, out)
     return out
@@ -243,13 +241,11 @@ def near_dup_pairs_between(
         hit = _pairs_cache.get(key)
         if hit is not None:
             return hit
-    ga = gram_sets(new_df, id_col, text_col, n, reuse=reuse)
-    gb = gram_sets(corpus_df, id_col, text_col, n, reuse=reuse)
-    inv_a = ga.select("id", F.size("grams").alias("na"), F.explode("grams").alias("g"))
-    inv_b = gb.select("id", F.size("grams").alias("nb"), F.explode("grams").alias("g"))
+    inv_a = _gram_index(gram_sets(new_df, id_col, text_col, n, reuse=reuse))
+    inv_b = _gram_index(gram_sets(corpus_df, id_col, text_col, n, reuse=reuse))
     if max_df is not None:
         # Corpus-side-only df counting is CORRECT here (contrast
-        # fuzzy_string_join, where it was a bug): set sizes na/nb stay
+        # fuzzy_string_join, where it was a bug): set sizes stay
         # PRE-filter, so dropping a batch gram that the corpus lacks
         # changes nothing — that gram could never match in the g-join and
         # contributes only to the (unchanged) denominator.  The cap is a
@@ -261,25 +257,8 @@ def near_dup_pairs_between(
         )
         inv_a = inv_a.join(keep.hint("merge"), "g")
         inv_b = inv_b.join(keep.hint("merge"), "g")
-    shared = (
-        inv_a.alias("a")
-        .hint("merge")  # corpus-derived sides: never a static broadcast
-        .join(inv_b.alias("b"), F.col("a.g") == F.col("b.g"))
-        .groupBy(
-            F.col("a.id").alias("id_new"),
-            F.col("b.id").alias("id_corpus"),
-            F.col("a.na").alias("na"),
-            F.col("b.nb").alias("nb"),
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        shared.withColumn(
-            "jac", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-        )
-        .filter(F.col("jac") >= tau)
-        .select("id_new", "id_corpus", F.round("jac", 6).alias("jac"))
-    )
+    shared = key_pairs(inv_a, inv_b, on=["g"])
+    out = _overlap_jaccard(shared, tau, "id_new", "id_corpus")
     if reuse:
         out = _pairs_cache.put(key, (new_df, corpus_df), out)
     return out
@@ -378,14 +357,13 @@ def minhash_candidates(
     n: int = 3,
     n_perm: int = 128,
     bands: int = 32,
-    carry_grams: bool = False,
 ) -> DataFrame:
-    """Candidate near-dup pairs: docs agreeing on >= 1 LSH band.
+    """Candidate near-dup pairs (id_a, id_b): docs agreeing on >= 1 LSH
+    band.
 
     bands=32 of r=4 rows: P(candidate) = 1-(1-j^4)^32 — ~0.5 at j≈0.35,
-    ~1.0 at j>=0.7.  The (band_idx, band_key) equi-join is the one shuffle.
-    ``carry_grams=True`` ships each side's shingle set through the shuffle
-    so exact verification is join-local (no second pass over the corpus).
+    ~1.0 at j>=0.7.  The (band_idx, band_key) equi-join is the one shuffle,
+    on narrow (id, band_idx, band_key) rows.
     """
     r = n_perm // bands
     # Docs with NO shingles (shorter than n tokens) have no MinHash
@@ -403,41 +381,7 @@ def minhash_candidates(
         "id",
         F.posexplode(lsh_band_keys(F.col("sig"), bands, r)).alias("band_idx", "band_key"),
     )
-    # merge hint: see near_dup_pairs_exact — a banded self-join side
-    # must never be a static broadcast.
-    a, b = banded.alias("a").hint("merge"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    if not carry_grams:
-        return pairs
-    # Decide on narrow rows, attach payloads once (round 13, guide §8):
-    # the pre-r13 form carried each doc's full shingle array through the
-    # bands-way posexplode, the band sort-merge self-join AND the pair
-    # dropDuplicates — every gram set crossed those exchanges `bands`
-    # times per side.  The band collision and the id ordering depend only
-    # on (id, band_idx, band_key), so the join/dedup above runs on ~40-byte
-    # rows and the gram sets join back HERE, each moving exactly once per
-    # side from the session-staged (persisted) gram relation.  Same rows,
-    # same schema: pairs are unique by (id_a, id_b) before the attach and
-    # gram sets are unique per id.
-    return pairs.join(
-        grams.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a")),
-        "id_a",
-    ).join(
-        grams.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b")),
-        "id_b",
-    ).select("id_a", "id_b", "grams_a", "grams_b")
+    return key_pairs(banded, on=["band_idx", "band_key"]).select("id_a", "id_b")
 
 
 def minhash_near_dup_pairs(
@@ -449,10 +393,13 @@ def minhash_near_dup_pairs(
     n_perm: int = 128,
     bands: int = 32,
 ) -> DataFrame:
-    """MinHash-LSH candidates verified with exact Jaccard, join-local (the
-    shingle sets ride the shuffle via ``carry_grams``)."""
-    cand = minhash_candidates(
-        df, id_col, text_col, n, n_perm, bands, carry_grams=True
+    """MinHash-LSH candidates verified with exact Jaccard.  The shingle
+    sets join the pairs once per side, from the session-staged gram
+    relation, after the band join has decided the pairs."""
+    cand = attach(
+        minhash_candidates(df, id_col, text_col, n, n_perm, bands),
+        gram_sets(df, id_col, text_col, n),
+        "grams",
     )
     return cand.select(
         "id_a",
@@ -541,7 +488,12 @@ def simhash_near_dup_pairs(
     bucket / language / shard) the way `cosine_near_dup_pairs` uses
     ``block_col``; h=8 at 100 TB needs Manku-style combination blocking."""
     n_chunks = max_hamming + 1
-    sh = df.select(F.col(id_col).alias("id"), simhash(F.col(text_col)).alias("sh"))
+    # the 8-byte fingerprint rides the chunk join as a per-id column; one
+    # fingerprint per id keeps each pair single
+    sh = one_per_id(
+        df.select(F.col(id_col).alias("id"), simhash(F.col(text_col)).alias("sh")),
+        "sh",
+    )
     chunked = sh.select(
         "id",
         "sh",
@@ -549,23 +501,14 @@ def simhash_near_dup_pairs(
             "chunk_idx", "chunk"
         ),
     )
-    # merge hint: see near_dup_pairs_exact — no static broadcast of a
-    # corpus-sized self-join side.
-    a, b = chunked.alias("a").hint("merge"), chunked.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        key_pairs(chunked, on=["chunk_idx", "chunk"])
         .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming"),
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -641,14 +584,13 @@ def fuzzy_string_join(
     pre-partitioned on the gram before persisting, so warm joins read
     co-partitioned in-memory blocks and elide both exchanges."""
 
-    def _inv(side: DataFrame, id_in: str, str_in: str, id_out: str, sz: str):
+    def _inv(side: DataFrame, id_in: str, str_in: str):
         key = (
             side.sparkSession.sparkContext.applicationId,
             "fuzzy_inv",
             semantic_key(side),
             id_in,
             str_in,
-            id_out,
             n,
             # layout differs by path: the direct-join form pre-partitions
             # on g, the max_df form does not — same rows either way, but a
@@ -660,11 +602,9 @@ def fuzzy_string_join(
             hit = _gram_cache.get(key)
             if hit is not None:
                 return hit
-        t = side.select(F.col(id_in).alias(id_out), F.col(str_in).alias("__s"))
-        t = t.select(id_out, _char_trigram_set_expr("__s", n).alias("gs"))
-        out = t.select(
-            id_out, F.size("gs").alias(sz), F.explode("gs").alias("g")
-        )
+        t = side.select(F.col(id_in).alias("id"), F.col(str_in).alias("__s"))
+        t = t.select("id", _char_trigram_set_expr("__s", n).alias("grams"))
+        out = _gram_index(t)
         if max_df is None:
             # pre-partition on the join key so warm joins read
             # co-partitioned cached blocks and elide both exchanges; under
@@ -675,8 +615,8 @@ def fuzzy_string_join(
             out = _gram_cache.put(key, side, out)
         return out
 
-    inv_l = _inv(left, left_id, left_str, "lid", "na")
-    inv_r = _inv(right, right_id, right_str, "rid", "nb")
+    inv_l = _inv(left, left_id, left_str)
+    inv_r = _inv(right, right_id, right_str)
     if max_df is not None:
         # Stop grams are identified SYMMETRICALLY: document frequency is
         # counted over the union of BOTH sides and only grams whose
@@ -706,27 +646,11 @@ def fuzzy_string_join(
         # The recount is a count window over the exploded relation — ONE
         # exchange per side, replacing the groupBy + join-back rounds that
         # cost two exchanges of the full inverted index per side.
-        from pyspark.sql import Window
-
-        inv_l = inv_l.withColumn(
-            "na", F.count("*").over(Window.partitionBy("lid"))
+        inv_l, inv_r = (
+            inv.withColumn("n", F.count("*").over(Window.partitionBy("id")))
+            for inv in (inv_l, inv_r)
         )
-        inv_r = inv_r.withColumn(
-            "nb", F.count("*").over(Window.partitionBy("rid"))
-        )
-    shared = (
-        inv_l.hint("merge")
-        .join(inv_r, "g")
-        .groupBy("lid", "rid", "na", "nb")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        shared.withColumn(
-            "jac", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-        )
-        .filter(F.col("jac") >= tau)
-        .select("lid", "rid", F.round("jac", 6).alias("jac"))
-    )
+    return _overlap_jaccard(key_pairs(inv_l, inv_r, on=["g"]), tau, "lid", "rid")
 
 
 def near_dup_pairs_prefix(
@@ -747,8 +671,8 @@ def near_dup_pairs_prefix(
     >= ceil(tau * max(|x|,|y|)) (the union is at least the larger set),
     and the prefix theorem then guarantees the two prefixes share at
     least one gram — so candidate generation is complete, and the exact
-    verify (array_intersect over the FULL gram sets, join-local) does the
-    rest.  ceil(tau*ng) runs in exact basis-point integer arithmetic
+    verify (array_intersect over the FULL gram sets, attached to the
+    candidate pairs) does the rest.  ceil(tau*ng) runs in exact basis-point integer arithmetic
     ((floor(tau*10000)*ng + 9999) // 10000), with tau snapped DOWN to the
     basis-point grid: a tau_bp that rounded UP (e.g. round(2/3*10000) =
     6667 > 2/3*10000) can make the integer ceil exceed the true
@@ -775,13 +699,11 @@ def near_dup_pairs_prefix(
     # floor, not round: tau_bp must never exceed tau*10000 (see docstring)
     tau_bp = int(math.floor(tau * 10000))
     grams = gram_sets(df, id_col, text_col, n, reuse=reuse)
-    inv = grams.select(
-        "id", F.size("grams").alias("ng"), F.explode("grams").alias("g")
-    )
+    inv = _gram_index(grams)
     dfreq = inv.groupBy("g").agg(F.count("*").alias("__df"))
     prefix_len = (
-        F.col("ng")
-        - F.floor((F.lit(tau_bp) * F.col("ng") + F.lit(9999)) / F.lit(10000.0))
+        F.col("n")
+        - F.floor((F.lit(tau_bp) * F.col("n") + F.lit(9999)) / F.lit(10000.0))
         + F.lit(1)
     )
     pre = (
@@ -795,25 +717,11 @@ def near_dup_pairs_prefix(
         .filter(F.col("__rk") <= prefix_len)
         .select("id", "g")
     )
-    a, b = pre.alias("a").hint("merge"), pre.alias("b")
-    cand = (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ga = grams.select(F.col("id").alias("id_a"), F.col("grams").alias("__ga"))
-    gb = grams.select(F.col("id").alias("id_b"), F.col("grams").alias("__gb"))
-    inter = F.size(F.array_intersect(F.col("__ga"), F.col("__gb")))
+    cand = key_pairs(pre, on=["g"]).select("id_a", "id_b")
     out = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
+        attach(cand, grams, "grams")
         .select(
-            "id_a",
-            "id_b",
-            (
-                inter.cast("double")
-                / (F.size("__ga") + F.size("__gb") - inter)
-            ).alias("jac"),
+            "id_a", "id_b", jaccard(F.col("grams_a"), F.col("grams_b")).alias("jac")
         )
         .filter(F.col("jac") >= tau)
         .select("id_a", "id_b", F.round("jac", 6).alias("jac"))

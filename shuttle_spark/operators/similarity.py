@@ -9,13 +9,14 @@ Three tiers, trading exactness for scale:
 * ``knn_join_brute`` — exact k-NN for a (small, broadcastable) batch of query
   vectors: broadcast-nested-loop + per-query top-k window.  Right shape when
   |queries| << |corpus| (the common batch-inference case).
-* ``lsh_candidate_pairs`` / ``ann_topk_lsh`` — random-hyperplane (sign) LSH:
-  signatures are computed in a vectorized pandas UDF (Arrow batches, numpy
-  matmul), candidates meet via an equi-join on (band, band-signature) —
-  i.e. the candidate generation is *exactly* a hash-partitioned shuffle,
-  the operation the reference's whole shuffle service exists to serve.
-  Exact cosine re-ranking of candidates restores precision; recall is
-  tunable via (n_planes, bands).
+* ``lsh_candidate_pairs`` / ``cosine_near_dup_pairs`` — random-hyperplane
+  (sign) LSH: signatures are computed in a vectorized pandas UDF (Arrow
+  batches, numpy matmul), candidates meet via an equi-join on (band,
+  band-signature) — i.e. the candidate generation is *exactly* a
+  hash-partitioned shuffle, the operation the reference's whole shuffle
+  service exists to serve (``pairs.key_pairs``).  Exact cosine re-scoring
+  of the candidates restores precision; recall is tunable via
+  (n_planes, bands).  ``ivf_build`` / ``ivf_topk`` are the ANN top-k path.
 
 The hyperplanes are seeded deterministically (seed=42) so results are
 reproducible across runs and executors.
@@ -38,6 +39,7 @@ from shuttle_spark.functions.vectors import (
     norm2,
     safe_cosine_kernel,
 )
+from shuttle_spark.operators.pairs import attach, key_pairs
 
 _SEED = 42
 
@@ -157,36 +159,19 @@ def lsh_candidate_pairs(
     n_planes: int = 32,
     bands: int = 8,
 ) -> DataFrame:
-    """Candidate near-neighbor pairs (id_a < id_b) that collide in >=1 band.
+    """Candidate near-neighbor pairs (id_a, id_b), id_a < id_b, that collide
+    in >=1 band.
 
     The join key (band_idx, band_key) is a plain equi-join — a hash shuffle
-    that AQE will skew-split if one bucket is hot.  Dedup across bands is a
-    dropDuplicates on the pair key (map-side partial, per dedup.py notes).
+    that AQE will skew-split if one bucket is hot — on narrow
+    (id, band_idx, band_key) rows; the vectors stay out of it, and grouping
+    per pair dedups across bands.  NULL embeddings get no bands and never
+    pair.
     """
     banded = add_lsh_bands(df, dim, vec_col, n_planes, bands).select(
-        F.col(id_col), F.col(vec_col), F.posexplode("bands").alias("band_idx", "band_key")
+        F.col(id_col).alias("id"), F.posexplode("bands").alias("band_idx", "band_key")
     )
-    # merge hint: a banded self-join side (vectors ride the shuffle) must
-    # never be a static broadcast — Catalyst size estimates under
-    # UDF+explode chains are unreliable (see neardup.near_dup_pairs_exact).
-    a = banded.alias("a").hint("merge")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{vec_col}").alias("vec_a"),
-            F.col(f"b.{vec_col}").alias("vec_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return pairs
+    return key_pairs(banded, on=["band_idx", "band_key"]).select("id_a", "id_b")
 
 
 def cosine_near_dup_pairs(
@@ -209,8 +194,11 @@ def cosine_near_dup_pairs(
     if exact:
         scored = _exact_all_pairs(df, threshold, id_col, vec_col, block_col)
     else:
-        cand = lsh_candidate_pairs(df, dim, id_col, vec_col, n_planes, bands)
-        scored = cand.select(
+        scored = attach(
+            lsh_candidate_pairs(df, dim, id_col, vec_col, n_planes, bands),
+            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
+            "vec",
+        ).select(
             "id_a",
             "id_b",
             cosine_pairs_vectorized(F.col("vec_a"), F.col("vec_b")).alias("sim"),
@@ -643,8 +631,9 @@ def semantic_dominated_ids(
     quantized ints — the `_exact_all_pairs` kernel shape, size-guarded at
     ``max_rows`` (raises, never OOMs).  exact=False (scale path): sign-LSH
     banded candidates (hash-partitioned equi-join, never all-pairs) with
-    the same integer verify join-local; recall tracked by the
-    ``semantic_dedup`` LSH-vs-exact superset test (tests/test_similarity).
+    the same integer verify over the quantized vectors attached to each
+    pair; recall tracked by the ``semantic_dedup`` LSH-vs-exact superset
+    test (tests/test_operators.py).
 
     SCALE RULE (measured, SCALING.md): bits-per-band = n_planes/bands must
     grow ~log2(n) to keep bucket occupancy bounded — the small-corpus
@@ -666,14 +655,8 @@ def semantic_dominated_ids(
             n_planes,
             bands,
         )
-        qa = quant.select(
-            F.col(id_col).alias("id_a"), F.col("qvec").alias("qv_a")
-        )
-        qb = quant.select(
-            F.col(id_col).alias("id_b"), F.col("qvec").alias("qv_b")
-        )
         idot = F.aggregate(
-            F.zip_with(F.col("qv_a"), F.col("qv_b"), lambda a, b: a * b),
+            F.zip_with(F.col("qvec_a"), F.col("qvec_b"), lambda a, b: a * b),
             F.lit(0).cast("long"),
             lambda acc, e: acc + e.cast("long"),
         ).cast("double")
@@ -682,15 +665,9 @@ def semantic_dominated_ids(
             F.lit(0).cast("long"),
             lambda acc, e: acc + e.cast("long"),
         ).cast("double")
-        scored = (
-            cand.select("id_a", "id_b")
-            .join(qa, "id_a")
-            .join(qb, "id_b")
-            .select(
-                "id_b",
-                (idot / F.sqrt(n2("qv_a") * n2("qv_b"))).alias("sim"),
-            )
-        )
+        scored = attach(
+            cand, quant.select(F.col(id_col).alias("id"), "qvec"), "qvec"
+        ).select("id_b", (idot / F.sqrt(n2("qvec_a") * n2("qvec_b"))).alias("sim"))
         return (
             scored.filter(F.col("sim") >= F.lit(float(threshold)))
             .select(F.col("id_b").alias(id_col))

@@ -448,6 +448,86 @@ def test_near_dup_paths_survive_null_and_short_text(spark):
     assert fps[1] is not None
 
 
+def test_candidate_pair_operators_emit_each_pair_once_on_duplicate_ids(spark):
+    """Ids are expected unique, but a duplicated id (the same row twice, or
+    one id on two different rows) must not emit a pair more than once: the
+    payload attach keeps one payload row per id."""
+    from shuttle_spark.operators import neardup as N
+    from shuttle_spark.operators import similarity as S
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    docs = spark.createDataFrame(
+        [
+            (1, base),
+            (2, base + " today"),
+            (2, base + " today"),  # the same row twice
+            (3, base + " again"),
+            (3, base + " once again"),  # one id, two different texts
+            (4, "an unrelated sentence about something else entirely here"),
+        ],
+        "doc_id bigint, text string",
+    )
+    emb = spark.createDataFrame(
+        [
+            (1, [1.0, 0.1, 0.0, 0.0]),
+            (2, [1.0, 0.2, 0.0, 0.0]),
+            (2, [1.0, 0.2, 0.0, 0.0]),
+            (3, [1.0, 0.0, 0.1, 0.0]),
+            (3, [1.0, 0.0, 0.2, 0.0]),
+            (4, [0.0, 0.0, 0.0, 1.0]),
+        ],
+        "vec_id bigint, embedding array<double>",
+    )
+    outputs = {
+        "minhash": N.minhash_near_dup_pairs(docs, 0.3, n_perm=32, bands=16),
+        "prefix": N.near_dup_pairs_prefix(docs, 0.3, reuse=False),
+        "simhash": N.simhash_near_dup_pairs(docs, max_hamming=16),
+        "cosine_lsh": S.cosine_near_dup_pairs(
+            emb, 4, 0.5, n_planes=8, bands=8, exact=False
+        ),
+    }
+    for name, df in outputs.items():
+        pairs = [(r["id_a"], r["id_b"]) for r in df.collect()]
+        assert pairs, f"{name}: no pairs at all, the check would be vacuous"
+        assert len(pairs) == len(set(pairs)), f"{name} repeats a pair: {pairs}"
+
+
+def test_lsh_candidate_pairs_equal_bruteforce_band_collisions(spark):
+    """The sign-LSH candidate set is exactly every i < j sharing a
+    (band_idx, band_key), with the keys recomputed in numpy from the same
+    seeded hyperplanes.  A NULL embedding has no bands and never pairs."""
+    import numpy as np
+
+    from shuttle_spark.operators import similarity as S
+
+    dim, n_planes, bands = 8, 12, 4
+    rng = np.random.RandomState(7)
+    vecs = {i: rng.normal(size=dim) for i in range(40)}
+    rows = [(i, [float(x) for x in v]) for i, v in vecs.items()] + [(40, None)]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+
+    planes = S._hyperplanes(dim, n_planes)
+    bits = n_planes // bands
+    weights = 1 << np.arange(bits, dtype=np.int64)
+    signs = np.stack(list(vecs.values())) @ planes.T >= 0
+    keys = dict(zip(vecs, (signs.reshape(-1, bands, bits) @ weights).tolist()))
+    want = {
+        (i, j)
+        for i in keys
+        for j in keys
+        if i < j and any(a == b for a, b in zip(keys[i], keys[j]))
+    }
+    got = [
+        (r["id_a"], r["id_b"])
+        for r in S.lsh_candidate_pairs(
+            emb, dim, n_planes=n_planes, bands=bands
+        ).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    assert 0 < len(want) < 40 * 39 // 2  # neither empty nor all pairs
+
+
 def test_mixture_weights_zero_token_group(spark):
     """A group whose docs are all empty must plan weight 1.0 / expected 0
     instead of dying on ANSI DIVIDE_BY_ZERO."""

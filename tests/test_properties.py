@@ -575,26 +575,44 @@ def test_union_weight_census_equals_exceptall_counts(spark):
         ([(1, 0), (1, 0)], []),  # right empty
         ([(1, 0), (2, 1), (3, 4)], [(1, 0), (2, 2), (3, 4)]),  # cell moved
     ]
-    for m_rows, r_rows in cases:
-        mk = lambda rows: spark.createDataFrame(  # noqa: E731
-            rows or [(None, None)], "vec_id long, cell int"
-        ).filter(F.col("vec_id").isNotNull())
-        m, r = mk(m_rows), mk(r_rows)
-        row = (
-            m.withColumn("w", F.lit(1))
-            .unionByName(r.withColumn("w", F.lit(-1)))
-            .groupBy("vec_id", "cell")
-            .agg(
-                F.sum("w").alias("d"),
-                F.sum(F.when(F.col("w") == 1, 1).otherwise(0)).alias("cm"),
-            )
-            .agg(
-                F.sum(F.abs(F.col("d"))).alias("mismatch"),
-                F.sum("cm").alias("n_m"),
-            )
-            .collect()[0]
+    # all cases in one query, keyed by a case column: the census, both
+    # exceptAll directions and |m| are counted per case
+    schema = "case int, vec_id long, cell int"
+    mk = lambda side: spark.createDataFrame(  # noqa: E731
+        [(c, v, cell) for c, rows in enumerate(cases) for v, cell in rows[side]],
+        schema,
+    )
+    m, r = mk(0), mk(1)
+    census = (
+        m.withColumn("w", F.lit(1))
+        .unionByName(r.withColumn("w", F.lit(-1)))
+        .groupBy("case", "vec_id", "cell")
+        .agg(
+            F.sum("w").alias("d"),
+            F.sum(F.when(F.col("w") == 1, 1).otherwise(0)).alias("cm"),
         )
+        .groupBy("case")
+        .agg(
+            F.sum(F.abs(F.col("d"))).alias("mismatch"),
+            F.sum("cm").alias("n_m"),
+        )
+    )
+    except_all = (
+        m.exceptAll(r).unionAll(r.exceptAll(m)).groupBy("case").count()
+    )
+    got = {
+        row["case"]: row
+        for row in spark.range(len(cases))
+        .select(F.col("id").cast("int").alias("case"))
+        .join(census, "case", "left")
+        .join(except_all.withColumnRenamed("count", "n_except"), "case", "left")
+        .join(
+            m.groupBy("case").count().withColumnRenamed("count", "n"), "case", "left"
+        )
+        .collect()
+    }
+    for c, (m_rows, r_rows) in enumerate(cases):
+        row = got[c]
         mismatch, n_m = row["mismatch"] or 0, row["n_m"] or 0
-        assert mismatch == m.exceptAll(r).count() + r.exceptAll(m).count(), (
-            m_rows, r_rows)
-        assert n_m == m.count(), (m_rows, r_rows)
+        assert mismatch == (row["n_except"] or 0), (m_rows, r_rows)
+        assert n_m == (row["n"] or 0) == len(m_rows), (m_rows, r_rows)

@@ -111,7 +111,8 @@ QUERIES = [
     # most buckets go bad and the drill approaches a full-table diff —
     # an honest linear-vs-linear ratio row).  The LOCALIZATION claim
     # (drill cost tracks suspect-bucket volume, not table volume) is a
-    # fixed-COUNT corruption experiment and lives in tools/recon_scale.py.
+    # fixed-COUNT corruption experiment; its result is in BASELINE.md
+    # ("Reconciliation family on the curve").
     "table_recon_counts",
     "table_recon_drill_rows",
     # round-9 extensions, all linear-cost oracles: the one-pass moment
